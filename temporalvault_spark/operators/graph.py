@@ -67,12 +67,12 @@ def rank_bcast_fits(n_nodes: int, avg_id_len: float | None) -> bool:
 
 
 def _edge_parts(df: DataFrame) -> int:
-    """Fan-out for pagerank_int's in-memory edge checkpoint (its only
-    remaining caller, r14 — the staged artifact no longer repartitions):
-    the session's configured shuffle-partition count, i.e. the same
-    scale-adaptive dial every other exchange uses (session.
-    _shuffle_partitions), so the checkpointed blocks give the iteration
-    join/aggregate map side full parallelism. The repartition provides
+    """Fan-out for pagerank_int's in-memory edge checkpoint and for the
+    write-side repartition of the staged trade-edge artifact in
+    stage_trade_edges (its two callers): the session's configured
+    shuffle-partition count, i.e. the same scale-adaptive dial every other
+    exchange uses (session._shuffle_partitions), so the checkpointed blocks
+    give the iteration join/aggregate map side full parallelism. The repartition provides
     PARALLELISM only — the r14 audit showed a checkpoint read-back
     carries no hash-partitioning metadata, so no downstream exchange is
     elided by it at any count."""

@@ -18,8 +18,8 @@ RUNTIME_CONFS = {
     # timestamps; with a UTC session they round-trip bit-exact vs DuckDB.
     "spark.sql.session.timeZone": "UTC",
     # NOTE: spark.sql.shuffle.partitions is set DYNAMICALLY in tune() —
-    # 8 x the session's core count (see _shuffle_partitions) — not a
-    # constant here.
+    # max(cores, input bytes / 128 MiB), capped (see _shuffle_partitions) —
+    # not a constant here.
     # AQE: runtime re-plan, skew-join splitting, partition coalescing.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -68,7 +68,8 @@ SHUFFLE_PARTITIONS_CAP = 65_536
 def _shuffle_partitions(spark: SparkSession, input_bytes: int | None = None) -> int:
     """Scale-adaptive shuffle-partition count, derived from INPUT SIZE:
     max(cores, input_bytes // 128 MiB), capped. ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
-    overrides everything (the deployment dial).
+    overrides everything (the deployment dial;
+    anything but an integer > 0 raises ValueError).
 
     History of this dial (it decided two round verdicts): a constant 32 was
     the r13 state — fast on the driver's box but a hard ceiling on any real
@@ -86,7 +87,12 @@ def _shuffle_partitions(spark: SparkSession, input_bytes: int | None = None) -> 
     session-only callers get the parallelism floor."""
     env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if env:
-        return int(env)
+        n = int(env) if env.strip().isdigit() else 0
+        if n <= 0:
+            raise ValueError(
+                f"SPARK_GRAFT_SHUFFLE_PARTITIONS must be an integer > 0, got {env!r}"
+            )
+        return n
     by_bytes = (input_bytes or 0) // SHUFFLE_TARGET_BYTES
     return max(spark.sparkContext.defaultParallelism, min(SHUFFLE_PARTITIONS_CAP, by_bytes))
 
@@ -100,6 +106,8 @@ def tune(spark: SparkSession, input_bytes: int | None = None) -> SparkSession:
         confs["spark.sql.shuffle.partitions"] = str(
             _shuffle_partitions(spark, input_bytes)
         )
+    except ValueError:
+        raise  # a malformed override is a deployment error, not a missing context
     except Exception:
         # A session without a usable SparkContext (e.g. Spark Connect) must
         # still get the correctness-critical confs below (r14 advice) —
@@ -121,7 +129,10 @@ def _ship_package(spark: SparkSession) -> None:
     reference module-level functions, which cloudpickle serializes by
     reference — the worker must import the module. addPyFile with a zip of
     the package is the runtime-settable way to guarantee that."""
-    sc = spark.sparkContext
+    try:
+        sc = spark.sparkContext
+    except Exception:
+        return  # no SparkContext (e.g. Spark Connect): nothing to ship to
     if getattr(sc, "_temporalvault_shipped", False):
         return
     import tempfile

@@ -13,23 +13,44 @@ Storage layout under ``root``:
                  reference's (record_id, timestamp) B-tree (models.py:21-24)
     snapshots/   materialized latest-per-key states, one dir per snapshot ts
     rollback_log/ small append-only audit table (models.py:41-51)
+    _generation  token rewritten before every write that can change a key's
+                 latest version (see below)
 
 Scale notes: every read is a declarative plan over the partitioned log —
 as-of state is one window shuffle bounded below by the newest snapshot;
 rollback is one job (state + inner join + atomic directory swap) instead of
 the reference's 2-round-trips-per-record loop (main.py:191-224).
+
+Write path: the vault keeps a ``record_id -> max version_num`` map on the
+driver (the reference's read-before-write, main.py:77-82, without a read).
+It is built on the first write from the newest snapshot plus the
+partition-pruned log tail, updated by every write, and dropped by
+``rollback``/``abort_ingest``. ``record()`` then writes its one row straight
+into ``records/dt=.../`` with pyarrow — hidden temp name, then an atomic
+rename — so a single-row write runs no Spark job. Before any write lands
+its data, it rewrites ``_generation`` with a fresh token; an instance trusts
+its map only while the file still holds the token it last saw or wrote, so
+a second ``TemporalVault`` on the same root used in turn (or a writer that
+crashed between the token and its data) makes the next write rebuild the
+map. Writers must still take turns: the vault is single-writer, and two
+instances writing concurrently can both mint the same ``v{N+1}``. The map
+holds one entry per key on the driver, and ``record_bulk`` broadcasts it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import shutil
 import time
 import uuid
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
+from zoneinfo import ZoneInfo
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,6 +68,47 @@ RECORD_SCHEMA = T.StructType(
         T.StructField("previous_version", T.StringType()),
     ]
 )
+AUDIT_SCHEMA = T.StructType(
+    [
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("rollback_to", T.TimestampType()),
+        T.StructField("n_affected", T.LongType()),
+        T.StructField("rollback_data", T.StringType()),
+    ]
+)
+# Arrow types of directly written files: what Spark reads back under the
+# schemas above (timestamps as UTC-adjusted micros, version_num as int32)
+_ARROW_TYPES = {
+    "long": pa.int64(),
+    "integer": pa.int32(),
+    "string": pa.string(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+
+
+def _arrow_table(rows: list[dict], schema: T.StructType) -> pa.Table:
+    """``rows`` as an Arrow table with ``schema``'s columns. Timestamps go
+    through ``TimestampType.toInternal``, the conversion
+    ``spark.createDataFrame`` applies (naive values in the process's local
+    zone, aware ones at their offset), so both paths store the same instant."""
+    cols = []
+    for f in schema.fields:
+        vals = [r[f.name] for r in rows]
+        if isinstance(f.dataType, T.TimestampType):
+            vals = [f.dataType.toInternal(v) for v in vals]
+        cols.append(pa.array(vals, _ARROW_TYPES[f.dataType.typeName()]))
+    return pa.Table.from_arrays(cols, names=schema.names)
+
+
+def _write_parquet(directory: str, table: pa.Table) -> None:
+    """Add one Parquet file to ``directory``: written under a hidden name
+    (Spark's file listing skips names starting with '.') and then renamed,
+    so a reader sees the whole file or none of it."""
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = f"{directory}/.{name}.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, f"{directory}/{name}")
 
 
 _WEEKDAYS = ["monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]
@@ -152,6 +214,10 @@ class TemporalVault:
         # engine analog of the reference's 1h-TTL Redis cache, main.py:115-147)
         self._cache: dict[str, DataFrame] = {}
         self.metrics: dict[str, dict[str, float]] = {}
+        # record_id -> max version_num, and the _generation token it is
+        # valid for (None: not built yet)
+        self._latest: dict[str, int] | None = None
+        self._gen_seen: str | None = None
 
     # -- observability (reference: Prometheus counters/histograms,
     # main.py:30-53; here a plain op->count/latency map) ---------------------
@@ -235,55 +301,113 @@ class TemporalVault:
     # -- write path (reference main.py:68-100) -------------------------------
 
     def record(self, record_id: str, data, ts: datetime | str | None = None) -> dict:
-        """Append one immutable version (POST /records): read-before-write for
-        the key's latest version (main.py:77-79), assign v{N+1} (main.py:82),
-        append. Payload may be any JSON-serializable value or raw string —
-        stored as its JSON string form (the reference stores the raw query
-        param string, main.py:71,85)."""
+        """Append one immutable version (POST /records): look up the key's
+        latest version (main.py:77-79) in the vault's version map, assign
+        v{N+1} (main.py:82), append. Payload may be any JSON-serializable
+        value or raw string — stored as its JSON string form (the reference
+        stores the raw query param string, main.py:71,85).
+
+        On a warm vault this runs no Spark job: the lookup is a dict read
+        (the map is rebuilt from snapshot + log tail only when it is cold or
+        ``_generation`` moved under it), and the row is written directly as
+        one small Parquet file into its ``dt=`` directory (hidden temp name,
+        atomic rename), after the generation token is rewritten. Relies on
+        the single-writer rule: writers on one root must take turns."""
         t0 = time.perf_counter()
         ts = parse_time(ts) if ts is not None else datetime.now().replace(microsecond=0)
         payload = data if isinstance(data, str) else json.dumps(data)
-        prev_num = self._latest_version_num(record_id)
-        prev_version = f"v{prev_num}" if prev_num else None
+        latest = self._latest_versions()
+        num = latest.get(record_id, 0) + 1
         row = {
             "id": uuid.uuid4().int % (1 << 62),
             "record_id": record_id,
-            "version": f"v{prev_num + 1}",
-            "version_num": prev_num + 1,
+            "version": f"v{num}",
+            "version_num": num,
             "data": payload,
             "ts": ts,
-            "previous_version": prev_version,
+            "previous_version": f"v{num - 1}" if num > 1 else None,
         }
-        self._append(self.spark.createDataFrame([row], RECORD_SCHEMA))
+        table = _arrow_table([row], RECORD_SCHEMA)
+        us = table.column("ts")[0].value
+        dt = datetime.fromtimestamp(us // 1_000_000, self._session_tz()).strftime("%Y-%m-%d")
+        with self._mutating():
+            _write_parquet(f"{self.records_path}/dt={dt}", table)
+        latest[record_id] = num
         self._invalidate_snapshots_from(ts)
         self._invalidate()
         self._timed("record", t0)
         return row
 
-    def _latest_version_num(self, record_id: str) -> int:
-        """The key's current max version_num WITHOUT a full-log scan: read the
-        newest snapshot (which already holds each key's latest version at
-        snap_ts) plus only the partition-pruned log tail after it. With
-        periodic snapshots a single-record write therefore touches O(tail)
-        data, not the whole 100 TB log; with no snapshot it degrades to the
-        old full scan (record_bulk remains the set-based bulk path)."""
+    # -- version map and generation token ------------------------------------
+
+    def _latest_versions(self) -> dict[str, int]:
+        """The ``record_id -> max version_num`` map, rebuilt when it is cold
+        or another writer (or a crashed one) moved ``_generation`` since this
+        instance last saw it."""
+        gen = self._read_generation()
+        if self._latest is None or gen != self._gen_seen:
+            scoped = self._version_source()
+            self._latest = (
+                {}
+                if scoped is None
+                else dict(scoped.groupBy("record_id").agg(F.max("version_num")).collect())
+            )
+            self._gen_seen = gen
+        return self._latest
+
+    def _version_source(self) -> DataFrame | None:
+        """What the version map is built from, without a full-log scan: the
+        newest snapshot (each key's latest version at snap_ts) plus only the
+        partition-pruned log tail after it; the whole log when there is no
+        snapshot, None when the log is empty."""
+        if not self._has_records():
+            return None
         snap_ts, snap_df = self._nearest_snapshot(datetime.max)
         if snap_df is None:
-            scoped = self.log()
-        else:
-            scoped = snap_df.unionByName(self.log(since_exclusive=snap_ts))
-        row = (
-            scoped.filter(F.col("record_id") == record_id)
-            .agg(F.max("version_num"))
-            .collect()[0]
-        )
-        return row[0] or 0
+            return self.log()
+        return snap_df.unionByName(self.log(since_exclusive=snap_ts))
+
+    def _read_generation(self) -> str | None:
+        try:
+            with open(f"{self.root}/_generation") as f:
+                return f.read()
+        except FileNotFoundError:
+            return None
+
+    @contextlib.contextmanager
+    def _mutating(self):
+        """Bracket a write that can change a key's latest version: rewrite
+        ``_generation`` (atomically) BEFORE the data lands, so any other
+        instance — or this one after a crash between the two — rebuilds its
+        map. If the write fails, the map is dropped: the data may or may not
+        have landed."""
+        gen = uuid.uuid4().hex
+        tmp = f"{self.root}/.generation-{gen}"
+        with open(tmp, "w") as f:
+            f.write(gen)
+        os.replace(tmp, f"{self.root}/_generation")
+        self._gen_seen = gen
+        try:
+            yield
+        except BaseException:
+            self._latest = None
+            raise
+
+    def _session_tz(self):
+        """The session time zone, which names a row's ``dt=`` partition (the
+        zone ``date_format`` uses in ``_append``)."""
+        name = self.spark.conf.get("spark.sql.session.timeZone")
+        m = re.fullmatch(r"(?:UTC|GMT)?([+-])(\d{1,2})(?::?(\d{2}))?", name)
+        if m:
+            off = timedelta(hours=int(m.group(2)), minutes=int(m.group(3) or 0))
+            return timezone(-off if m.group(1) == "-" else off)
+        return timezone.utc if name in ("UTC", "GMT", "Z") else ZoneInfo(name)
 
     def record_bulk(self, rows: DataFrame, stage_tag: str | None = None) -> int:
         """Bulk append: ``rows`` needs (record_id, data, ts). Version numbers
-        continue each key's chain — one window over the union of the existing
-        per-key max and the new batch (set-based main.py:82, no per-row
-        lookups).
+        continue each key's chain in (ts, data) order — one window over the
+        batch, offset by the version map's per-key max (set-based main.py:82,
+        no per-row lookups and no scan of the log once the map is warm).
 
         ``stage_tag`` turns the append TRANSACTIONAL (the exactly-once seam
         for streaming ingest): the batch first writes to a private staging
@@ -297,22 +421,31 @@ class TemporalVault:
         run compact()/rollback() while a tagged ingest is in flight (they
         rewrite the file layout the tag-undo relies on)."""
         t0 = time.perf_counter()
-        base = (
-            self.log()
-            .groupBy("record_id")
-            .agg(F.max("version_num").alias("base_num"))
+        latest = self._latest_versions()
+        batch = rows.select(
+            "record_id",
+            F.col("data").cast("string").alias("data"),
+            F.date_trunc("second", "ts").alias("ts"),
         )
+        # base numbers come from the version map (broadcast of its entries),
+        # not from grouping the whole log; built from Arrow, the map is a
+        # local relation, so the broadcast needs no job of its own
+        base_num = F.lit(0)
+        if latest:
+            base = self.spark.createDataFrame(
+                pa.table(
+                    {
+                        "record_id": pa.array(list(latest), pa.string()),
+                        "base_num": pa.array(list(latest.values()), pa.int32()),
+                    }
+                )
+            )
+            batch = batch.join(F.broadcast(base), "record_id", "left")
+            base_num = F.coalesce("base_num", F.lit(0))
         w = Window.partitionBy("record_id").orderBy("ts", "data")
         batch = (
-            rows.select(
-                "record_id",
-                F.col("data").cast("string").alias("data"),
-                F.date_trunc("second", "ts").alias("ts"),
-            )
-            .join(F.broadcast(base), "record_id", "left")
-            .withColumn("base_num", F.coalesce("base_num", F.lit(0)))
-            .withColumn("offset", F.row_number().over(w))
-            .withColumn("version_num", (F.col("base_num") + F.col("offset")).cast("int"))
+            batch.withColumn("offset", F.row_number().over(w))
+            .withColumn("version_num", (base_num + F.col("offset")).cast("int"))
             .withColumn("version", F.concat(F.lit("v"), F.col("version_num")))
             .withColumn(
                 "previous_version",
@@ -326,22 +459,34 @@ class TemporalVault:
             )
             .select([f.name for f in RECORD_SCHEMA.fields])
         )
-        # persist: the window+join pipeline feeds both the count and the
-        # append — without it the whole batch plan executes twice
+        # persist: the window+join pipeline feeds both the per-key stats and
+        # the append — without it the whole batch plan executes twice
         batch = batch.persist()
         try:
-            n = batch.count()
-            if stage_tag is None:
-                self._append(batch)
-            else:
-                stage = self._stage_path(stage_tag)
-                if os.path.isdir(stage):
-                    shutil.rmtree(stage)  # leftovers of a failed prior try
-                self._append(batch, stage)
-                self._promote_stage(stage_tag)
+            # one grouped collect: row count, earliest ts (snapshot
+            # invalidation) and each key's new max version (the map)
+            stats = (
+                batch.groupBy("record_id")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.min("ts").alias("lo"),
+                    F.max("version_num").alias("hi"),
+                )
+                .collect()
+            )
+            with self._mutating():
+                if stage_tag is None:
+                    self._append(batch)
+                else:
+                    stage = self._stage_path(stage_tag)
+                    if os.path.isdir(stage):
+                        shutil.rmtree(stage)  # leftovers of a failed prior try
+                    self._append(batch, stage)
+                    self._promote_stage(stage_tag)
+            latest.update((r["record_id"], r["hi"]) for r in stats)
+            n = sum(r["n"] for r in stats)
             if n:
-                min_ts = batch.agg(F.min("ts")).first()[0]
-                self._invalidate_snapshots_from(min_ts)
+                self._invalidate_snapshots_from(min(r["lo"] for r in stats))
         finally:
             batch.unpersist()
         self._invalidate()
@@ -391,15 +536,18 @@ class TemporalVault:
     def abort_ingest(self, tag: str) -> None:
         """Undo an uncommitted ingest: delete every log file carrying the tag
         (whether the promotion finished or died halfway) plus the staging
-        dir. Idempotent — safe to re-run after a crash during the abort."""
-        if os.path.isdir(self.records_path):
-            for dt_dir in os.listdir(self.records_path):
-                d = f"{self.records_path}/{dt_dir}"
-                if not (dt_dir.startswith("dt=") and os.path.isdir(d)):
-                    continue
-                for fn in os.listdir(d):
-                    if fn.startswith(f"ingest-{tag}-"):
-                        os.remove(f"{d}/{fn}")
+        dir. Idempotent — safe to re-run after a crash during the abort.
+        Drops the version map: the removed rows may have held a key's max."""
+        with self._mutating():
+            if os.path.isdir(self.records_path):
+                for dt_dir in os.listdir(self.records_path):
+                    d = f"{self.records_path}/{dt_dir}"
+                    if not (dt_dir.startswith("dt=") and os.path.isdir(d)):
+                        continue
+                    for fn in os.listdir(d):
+                        if fn.startswith(f"ingest-{tag}-"):
+                            os.remove(f"{d}/{fn}")
+        self._latest = None
         shutil.rmtree(self._stage_path(tag), ignore_errors=True)
         self._invalidate()
 
@@ -548,9 +696,7 @@ class TemporalVault:
             "n_affected": audit["n_affected"],
             "rollback_data": json.dumps({"record_ids": list(audit["affected_keys"])}),
         }
-        self.spark.createDataFrame([audit_row]).write.mode("append").parquet(
-            self.rollback_log_path
-        )
+        _write_parquet(self.rollback_log_path, _arrow_table([audit_row], AUDIT_SCHEMA))
 
         # post-T rows of surviving keys are rewritten to the target version's
         # data AND labels (version / version_num / previous_version), exactly
@@ -588,9 +734,12 @@ class TemporalVault:
             .parquet(tmp)
         )
         old = f"{self.root}/.records_old_{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(self.records_path):
-            os.rename(self.records_path, old)
-        os.rename(tmp, self.records_path)
+        with self._mutating():
+            if os.path.isdir(self.records_path):
+                os.rename(self.records_path, old)
+            os.rename(tmp, self.records_path)
+        # rewritten labels and dropped keys lower maxima: rebuild on next write
+        self._latest = None
         if os.path.isdir(old):
             shutil.rmtree(old)
         # snapshots materialized AFTER the rollback target contain
@@ -753,10 +902,13 @@ class TemporalVault:
         """Last N rollback entries, newest first (main.py:251-267) — planned
         as TakeOrderedAndProject."""
         if not os.path.isdir(self.rollback_log_path):
-            return self.spark.createDataFrame(
-                [], "ts timestamp, rollback_to timestamp, n_affected long, rollback_data string"
-            )
-        return self.spark.read.parquet(self.rollback_log_path).orderBy(F.desc("ts")).limit(limit)
+            return self.spark.createDataFrame([], AUDIT_SCHEMA)
+        return (
+            self.spark.read.schema(AUDIT_SCHEMA)
+            .parquet(self.rollback_log_path)
+            .orderBy(F.desc("ts"))
+            .limit(limit)
+        )
 
     # -- compare (reference main.py:270-343) ---------------------------------
 
@@ -774,26 +926,33 @@ class TemporalVault:
         version, so the diff endpoint is exact."""
         t0 = time.perf_counter()
         if start is not None:
-            self._check_floor(parse_time(start), "compare(start)")
+            start = parse_time(start)
+            self._check_floor(start, "compare(start)")
         if end is not None:
-            self._check_floor(parse_time(end), "compare(end)")
-        key_log = self.log().filter(F.col("record_id") == record_id)
+            end = parse_time(end)
+            self._check_floor(end, "compare(end)")
+        # one read of the key's versions (bounded by the later as-of point
+        # when both are given); bounds and as-of points are worked out here
+        until = max(start, end) if start is not None and end is not None else None
+        rows = (
+            self.log(until=until)
+            .filter(F.col("record_id") == record_id)
+            .select("id", "version", "version_num", "data", "ts", F.unix_micros("ts").alias("us"))
+            .collect()
+        )
         if start is None or end is None:
-            bounds = key_log.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
-            if bounds["lo"] is None:
+            if not rows:
                 raise KeyError(f"record {record_id!r} not found")
-            start = start or bounds["lo"]
-            end = end or bounds["hi"]
-        start, end = parse_time(start), parse_time(end)
+            if start is None:
+                start = parse_time(min(rows, key=lambda r: r["us"])["ts"])
+            if end is None:
+                end = parse_time(max(rows, key=lambda r: r["us"])["ts"])
 
         def point(ts):
-            rows = (
-                key_log.filter(F.col("ts") <= F.lit(ts))
-                .orderBy(F.desc("version_num"))
-                .limit(1)
-                .collect()
-            )
-            return rows[0] if rows else None
+            # latest version at ts, tie-broken like state_at
+            cut = T.TimestampType().toInternal(ts)
+            live = [r for r in rows if r["us"] <= cut]
+            return max(live, key=lambda r: (r["version_num"], r["us"], r["id"]), default=None)
 
         s_row, e_row = point(start), point(end)
 

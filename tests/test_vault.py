@@ -2,7 +2,7 @@
 from FIXTURES.md encoding the reference's edge semantics (cites into
 /root/reference/app/main.py)."""
 
-from datetime import datetime
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -241,31 +241,182 @@ def test_record_bulk_ids_unique_across_batches(vault, spark):
     assert len(ids) == len(set(ids))  # no collisions across batches
 
 
-def test_record_lookup_uses_snapshot_tail_not_full_scan(vault):
-    """Single-record writes must serve the latest-version lookup from the
-    newest snapshot + the partition-pruned log tail, never a full-log scan
-    (the 100 TB write-path fix): after a snapshot at T, the tail read prunes
-    dt= partitions below date(T), and version assignment stays correct."""
+def test_record_lookup_uses_snapshot_tail_not_full_scan(vault, spark):
+    """Single-record writes must build their version map from the newest
+    snapshot + the partition-pruned log tail, never a full-log scan (the
+    100 TB write-path fix): after a snapshot at T, every read of the log in
+    the map's source prunes dt= partitions below date(T), and version
+    assignment stays correct."""
     import re
 
     from temporalvault_spark.plans import executed_plan
 
     vault.snapshot(TS["a3"])  # holds a=v3, b=v1, c=v1
-    # the pruned tail the lookup reads: only dt >= 2026-01-03 survives
-    plan = executed_plan(vault.log(since_exclusive=TS["a3"]))
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "dt" in m.group(1) and ">=" in m.group(1), m and m.group(1)
+    # a vault opened on the root starts cold and builds its map from the
+    # pruned tail: only dt >= 2026-01-03 survives in every log scan
+    v2 = TemporalVault(spark, vault.root)
+    plan = executed_plan(v2._version_source())
+    prunes = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    log_scans = [p for p in prunes if "dt" in p]
+    assert log_scans and all(">=" in p for p in log_scans), prunes
+    assert len(prunes) == 2, prunes  # the snapshot and the pruned tail, nothing else
 
     # correctness: next version continues each chain through the snapshot path
-    assert vault._latest_version_num("a") == 3
-    assert vault._latest_version_num("b") == 1
-    assert vault._latest_version_num("nope") == 0
-    r = vault.record("a", {"x": "7"}, datetime(2026, 1, 4))
+    latest = v2._latest_versions()
+    assert latest == {"a": 3, "b": 1, "c": 1}
+    assert latest.get("nope", 0) == 0
+    r = v2.record("a", {"x": "7"}, datetime(2026, 1, 4))
     assert (r["version"], r["previous_version"]) == ("v4", "v3")
     # a write at-or-before the snapshot invalidates it; lookup still correct
-    r2 = vault.record("b", {"k": "2"}, TS["b1"])
+    r2 = v2.record("b", {"k": "2"}, TS["b1"])
     assert (r2["version"], r2["previous_version"]) == ("v2", "v1")
-    assert vault._latest_version_num("a") == 4
+    assert v2._latest_versions()["a"] == 4
+
+
+def _jobs_run(spark, fn):
+    """(result of fn(), number of Spark jobs it ran), counted with the
+    status tracker under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"tv-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_record_on_warm_vault_runs_no_spark_job(vault, spark):
+    # the probe does count jobs: a log read under it runs some
+    assert _jobs_run(spark, lambda: vault.log().count())[1] > 0
+    row, jobs = _jobs_run(spark, lambda: vault.record("a", {"x": "8"}, datetime(2026, 1, 4)))
+    assert jobs == 0
+    assert (row["version"], row["previous_version"]) == ("v4", "v3")
+    got = {(r["record_id"], r["version"]) for r in vault.state_at(datetime(2026, 1, 5)).collect()}
+    assert ("a", "v4") in got
+
+
+def test_two_instances_alternating_writes_never_duplicate_versions(spark, tmp_path):
+    """Two vaults on one root, used in turn: each write sees the other's
+    generation token and rebuilds its map, so the chain is v1..vN."""
+    root = str(tmp_path / "two_writers")
+    a, b = TemporalVault(spark, root), TemporalVault(spark, root)
+    got = []
+    for i in range(6):
+        got.append((a if i % 2 == 0 else b).record("k", {"i": i}, datetime(2026, 1, 1, 0, 0, i))["version"])
+    batch = spark.createDataFrame(
+        [("k", '{"i": 6}', datetime(2026, 1, 1, 0, 0, 6))],
+        "record_id string, data string, ts timestamp",
+    )
+    b.record_bulk(batch)  # b's map is still current: nothing wrote since
+    got.append(a.record("k", {"i": 7}, datetime(2026, 1, 1, 0, 0, 7))["version"])
+    assert got == ["v1", "v2", "v3", "v4", "v5", "v6", "v8"]
+    nums = sorted(r["version_num"] for r in a.log().collect())
+    assert nums == list(range(1, 9))
+
+
+def test_crash_after_generation_bump_makes_next_writer_rebuild(spark, tmp_path, monkeypatch):
+    """A writer that dies after rewriting _generation but before its file
+    lands leaves a token no live instance has seen: the next write of every
+    instance rebuilds its map instead of trusting it."""
+    import temporalvault_spark.vault as vault_mod
+
+    root = str(tmp_path / "crashed_writer")
+    a = TemporalVault(spark, root)
+    a.record("k", {"i": 1}, datetime(2026, 1, 1))
+    b = TemporalVault(spark, root)
+
+    def crash(directory, table):
+        raise OSError("process died before the file landed")
+
+    monkeypatch.setattr(vault_mod, "_write_parquet", crash)
+    with pytest.raises(OSError):
+        b.record("k", {"i": 2}, datetime(2026, 1, 2))
+    monkeypatch.undo()
+
+    row, jobs = _jobs_run(spark, lambda: a.record("k", {"i": 3}, datetime(2026, 1, 3)))
+    assert jobs > 0  # rebuilt: the token moved under a's map
+    assert row["version"] == "v2"
+    assert b.record("k", {"i": 4}, datetime(2026, 1, 4))["version"] == "v3"
+    assert sorted(r["version_num"] for r in a.log().collect()) == [1, 2, 3]
+
+
+@pytest.mark.parametrize(
+    "session_tz, ts",
+    [
+        ("UTC", datetime(2026, 1, 2, 23, 30, 5)),
+        ("UTC", datetime(2026, 1, 2, 23, 30, 5, tzinfo=timezone(timedelta(hours=-5)))),
+        ("Asia/Kolkata", datetime(2026, 1, 2, 20, 0, 0)),
+        ("-08:00", datetime(2026, 1, 3, 3, 0, 0, tzinfo=timezone(timedelta(hours=2)))),
+    ],
+)
+def test_direct_row_reads_back_like_a_spark_write(spark, tmp_path, session_tz, ts):
+    """A row record() writes with pyarrow reads back with the same ts and
+    lands in the same dt= directory as the Spark write of that row would
+    (spark.createDataFrame + _append's date_format in the session zone)."""
+    import os
+    from zoneinfo import ZoneInfo
+
+    from pyspark.sql import types as T
+
+    from temporalvault_spark.vault import RECORD_SCHEMA
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", session_tz)
+    try:
+        v = TemporalVault(spark, str(tmp_path / "direct"))
+        spark.conf.set("spark.sql.session.timeZone", session_tz)  # tune() reset it
+        row = v.record("k", {"x": 1}, ts)
+        want = (
+            spark.createDataFrame([row], RECORD_SCHEMA)
+            .select(F.unix_micros("ts"), F.date_format("ts", "yyyy-MM-dd"))
+            .first()
+        )
+        us = T.TimestampType().toInternal(row["ts"])
+        zone = timezone(timedelta(hours=-8)) if session_tz == "-08:00" else ZoneInfo(session_tz)
+        dt = datetime.fromtimestamp(us // 1_000_000, zone).strftime("%Y-%m-%d")
+        assert tuple(want) == (us, dt)
+        got = (
+            spark.read.schema(T.StructType(RECORD_SCHEMA.fields + [T.StructField("dt", T.StringType())]))
+            .parquet(v.records_path)
+            .select(F.unix_micros("ts"), "dt", "version_num", "id")
+            .collect()
+        )
+        assert [tuple(r) for r in got] == [(us, dt, 1, row["id"])]
+        assert os.listdir(v.records_path) == [f"dt={dt}"]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_history_reads_audit_rows_of_both_writers(vault, spark):
+    """history() reads the audit row rollback writes directly with pyarrow,
+    next to one stored by the Spark writer rollback used before."""
+    import json
+    import os
+
+    spark.createDataFrame(
+        [{
+            "ts": datetime(2026, 2, 1),
+            "rollback_to": datetime(2026, 1, 1),
+            "n_affected": 7,
+            "rollback_data": json.dumps({"record_ids": ["z"]}),
+        }]
+    ).write.mode("append").parquet(vault.rollback_log_path)
+    vault.rollback(T_MID)
+    direct = [
+        f for f in os.listdir(vault.rollback_log_path)
+        if f.startswith("part-") and f.endswith(".parquet") and "c000" not in f
+    ]
+    assert len(direct) == 1
+    hist = vault.history(5).collect()
+    assert len(hist) == 2
+    new, old = hist  # newest first: the rollback just ran
+    assert new["rollback_to"] == T_MID and new["n_affected"] == 2
+    assert json.loads(new["rollback_data"]) == {"record_ids": ["a", "b"]}
+    assert (old["ts"], old["rollback_to"], old["n_affected"]) == (
+        datetime(2026, 2, 1), datetime(2026, 1, 1), 7)
 
 
 def test_state_at_snapshot_tail_is_partition_pruned(vault):
