@@ -216,8 +216,12 @@ def assert_ingest_layout(path: str, family: str) -> None:
 
 def atomic_swap_rebuild(path: str, build_to: Callable[[str], None]) -> None:
     """Build a replacement index into a SIBLING directory and rename-swap
-    it in (the rollback_state swap precedent): probes racing the rebuild
-    see either the old index or the new one, never a mixture. The swap
+    it in (the vault's ``_replace_log`` does the same for its log): probes
+    racing the rebuild see either the old index or the new one, never a
+    mixture. The index family keeps its own protocol because its readers
+    repair a crashed swap on their own (``adopt_swapped`` renames the old
+    copy back), where the vault decides promote-or-restore at open from the
+    new copy's ``_SUCCESS`` marker. The swap
     itself is two renames, so a crash exactly between them leaves no index
     at ``path`` and the complete old one at ``path.old`` — that window is
     repaired by ``adopt_swapped``, which every sidecar read (and this

@@ -9,6 +9,8 @@ main.py:191-224); here each is ONE distributed job: scan → pushed-down filter
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,7 +31,29 @@ def _tr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- as-of reads -----------------------------------------------------------
 
 
-def asof_all_versions(tr: DataFrame, ts: str) -> DataFrame:
+def latest_per_key(df: DataFrame) -> DataFrame:
+    """Each key's latest row of ``df``, with ``df``'s columns — the one
+    latest-per-key kernel, shared by every as-of operator here and by the
+    vault (state_at, expire's baselines). One window over record_id = one
+    shuffle; Spark plans partial filtering via WindowGroupLimit before the
+    shuffle (rank<=1 pushdown).
+
+    Ties on version_num fall to (ts, id): after a vault rollback the log can
+    hold several rows with the same (record_id, version_num) — the rewritten
+    rows keep their own ts and id — so the pick must still be deterministic.
+    The catalog numbers versions with row_number(), unique per key, so the
+    tie-breakers change no registry result."""
+    w = Window.partitionBy("record_id").orderBy(
+        F.desc("version_num"), F.desc("ts"), F.desc("id")
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select(df.columns)
+    )
+
+
+def asof_all_versions(tr: DataFrame, ts: str | datetime) -> DataFrame:
     """All versions of all keys at or before ts, newest first — the faithful
     /query semantic (main.py:127-129: no per-key dedup). The filter is pushed
     to the parquet scan; the sort is presentation-only."""
@@ -42,15 +66,9 @@ def asof_all_versions(tr: DataFrame, ts: str) -> DataFrame:
 
 def asof_latest_per_key(tr: DataFrame, ts: str) -> DataFrame:
     """State of every key as of ts — latest version ≤ ts per key
-    (main.py:193-196 does this per-key in a loop; README.md:7 is the claim).
-    One window over record_id = one shuffle; Spark plans partial filtering
-    via WindowGroupLimit before the shuffle (rank<=1 pushdown)."""
-    w = Window.partitionBy("record_id").orderBy(F.desc("version_num"))
-    return (
-        tr.filter(F.col("ts") <= F.lit(ts).cast("timestamp"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("record_id", "version", "data", "ts")
+    (main.py:193-196 does this per-key in a loop; README.md:7 is the claim)."""
+    return latest_per_key(tr.filter(F.col("ts") <= F.lit(ts).cast("timestamp"))).select(
+        "record_id", "version", "data", "ts"
     )
 
 
@@ -402,14 +420,9 @@ def q_asof_by_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same single-window shape as asof_latest_per_key: the version_num
     predicate is pushed to the scan, WindowGroupLimit keeps only one row per
     key per partition ahead of the shuffle."""
-    w = Window.partitionBy("record_id").orderBy(F.desc("version_num"))
-    return (
-        _tr(spark, sf_dir)
-        .filter(F.col("version_num") <= PROBE_VERSION)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("record_id", "version", "data", "ts")
-    )
+    return latest_per_key(
+        _tr(spark, sf_dir).filter(F.col("version_num") <= PROBE_VERSION)
+    ).select("record_id", "version", "data", "ts")
 
 
 @query(
@@ -460,12 +473,8 @@ def q_compare_diff_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = _tr(spark, sf_dir)
 
     def state(ts: str, data_alias: str) -> DataFrame:
-        w = Window.partitionBy("record_id").orderBy(F.desc("version_num"))
-        return (
-            tr.filter(F.col("ts") <= F.lit(ts).cast("timestamp"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("record_id", F.col("data").alias(data_alias))
+        return latest_per_key(tr.filter(F.col("ts") <= F.lit(ts).cast("timestamp"))).select(
+            "record_id", F.col("data").alias(data_alias)
         )
 
     s = state(PROBE_TS_EARLY, "sd")
@@ -634,13 +643,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered MERGE: upsert the fixed 10-key batch (5 updates, 5
     inserts — MERGE_BATCH_KEYS) into the latest state of the vault and
     return the post-merge table with per-row actions."""
-    tr = _tr(spark, sf_dir)
-    w = Window.partitionBy("record_id").orderBy(F.desc("version_num"))
-    current = (
-        tr.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("record_id", "version_num", "data")
-    )
+    current = latest_per_key(_tr(spark, sf_dir)).select("record_id", "version_num", "data")
     spark_b = spark.createDataFrame(
         [(k,) for k in MERGE_BATCH_KEYS], "record_id string"
     ).select("record_id", F.concat(F.lit("upsert:"), F.col("record_id")).alias("new_data"))

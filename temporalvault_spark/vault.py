@@ -18,8 +18,15 @@ Storage layout under ``root``:
 
 Scale notes: every read is a declarative plan over the partitioned log —
 as-of state is one window shuffle bounded below by the newest snapshot;
-rollback is one job (state + inner join + atomic directory swap) instead of
-the reference's 2-round-trips-per-record loop (main.py:191-224).
+rollback is an audit aggregate plus one rewrite job (state + inner join,
+then the atomic directory swap) instead of the reference's
+2-round-trips-per-record loop (main.py:191-224).
+
+Each piece of temporal semantics has one implementation: latest-per-key is
+``operators.temporal.latest_per_key`` (state_at, expire's baselines and the
+registry's as-of operators), every log rewrite (rollback, compact, expire)
+is ``_replace_log``, and stale snapshots are dropped by
+``_drop_snapshots_from`` over the one snapshot listing, ``_snapshots``.
 
 Write path: the vault keeps a ``record_id -> max version_num`` map on the
 driver (the reference's read-before-write, main.py:77-82, without a read).
@@ -55,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from temporalvault_spark.operators.temporal import asof_all_versions, latest_per_key
 from temporalvault_spark.session import tune
 
 RECORD_SCHEMA = T.StructType(
@@ -111,6 +119,8 @@ def _write_parquet(directory: str, table: pa.Table) -> None:
     os.replace(tmp, f"{directory}/{name}")
 
 
+_SNAPSHOT_NAME = "%Y%m%dT%H%M%S"  # snapshots/<snap_ts>/, whole seconds
+
 _WEEKDAYS = ["monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]
 _MONTHS = {
     name: i + 1
@@ -137,6 +147,7 @@ def parse_time(text: str | datetime, now: datetime | None = None) -> datetime:
     main.py:110-111). Lives at the API layer, never inside the engine; the
     reference's nondeterminism (datetime.now()) is injectable here via
     ``now`` so tests stay reproducible. Truncates to seconds (main.py:112).
+    A tz-aware datetime becomes the naive local time of the same instant.
 
     Grammar (the common ``parsedatetime`` forms the reference accepts):
     now / today / yesterday / tomorrow (optionally "at 4pm" / "at 16:30"),
@@ -145,6 +156,10 @@ def parse_time(text: str | datetime, now: datetime | None = None) -> datetime:
     "last/next week|month|year", month-name dates ("march 5", "5 march 2026",
     "jan 5 at 3pm"), and ISO / "YYYY-MM-DD HH:MM:SS"."""
     if isinstance(text, datetime):
+        if text.tzinfo is not None:
+            # snapshot names, the retention floor and compare's bounds are
+            # naive; TimestampType.toInternal maps this form to the same instant
+            text = text.astimezone().replace(tzinfo=None)
         return text.replace(microsecond=0)
     now = (now or datetime.now()).replace(microsecond=0)
     s = re.sub(r"\s+", " ", text.strip().lower())
@@ -194,8 +209,8 @@ def parse_time(text: str | datetime, now: datetime | None = None) -> datetime:
         day = int(m.group(2) or m.group(3))
         base = datetime(int(m.group(5) or now.year), month, day)
         return _apply_clock(base, m, 6) if m.group(6) else base
-    # ISO / "YYYY-MM-DD HH:MM:SS" forms
-    return datetime.fromisoformat(text.strip()).replace(microsecond=0)
+    # ISO / "YYYY-MM-DD HH:MM:SS" forms, with or without an offset
+    return parse_time(datetime.fromisoformat(text.strip()))
 
 
 class TemporalVault:
@@ -230,12 +245,12 @@ class TemporalVault:
     # -- log access ----------------------------------------------------------
 
     def _recover_swaps(self) -> None:
-        """Crash recovery for the two-rename directory swap used by
-        rollback()/compact() (tmp write → records->old → tmp->records →
-        rm old). A crash between the two renames leaves no records/ dir with
-        the data stranded in .records_old_*; a crash before/after leaves
-        orphaned .records_tmp_* / .records_old_* dirs that would otherwise
-        accumulate forever. Run at vault open and before every swap:
+        """Crash recovery for ``_replace_log``'s two-rename directory swap
+        (tmp write → records->old → tmp->records → rm old). A crash between
+        the two renames leaves no records/ dir with the data stranded in
+        .records_old_*; a crash before/after leaves orphaned .records_tmp_* /
+        .records_old_* dirs that would otherwise accumulate forever. Run at
+        vault open and before every op that rewrites the log:
 
         - records/ missing + a COMPLETE tmp (Spark's _SUCCESS marker, written
           only when the job finished) → the swap had passed the point of no
@@ -330,10 +345,10 @@ class TemporalVault:
         table = _arrow_table([row], RECORD_SCHEMA)
         us = table.column("ts")[0].value
         dt = datetime.fromtimestamp(us // 1_000_000, self._session_tz()).strftime("%Y-%m-%d")
+        self._drop_snapshots_from(ts)
         with self._mutating():
             _write_parquet(f"{self.records_path}/dt={dt}", table)
         latest[record_id] = num
-        self._invalidate_snapshots_from(ts)
         self._invalidate()
         self._timed("record", t0)
         return row
@@ -474,6 +489,9 @@ class TemporalVault:
                 )
                 .collect()
             )
+            n = sum(r["n"] for r in stats)
+            if n:
+                self._drop_snapshots_from(min(r["lo"] for r in stats))
             with self._mutating():
                 if stage_tag is None:
                     self._append(batch)
@@ -484,9 +502,6 @@ class TemporalVault:
                     self._append(batch, stage)
                     self._promote_stage(stage_tag)
             latest.update((r["record_id"], r["hi"]) for r in stats)
-            n = sum(r["n"] for r in stats)
-            if n:
-                self._invalidate_snapshots_from(min(r["lo"] for r in stats))
         finally:
             batch.unpersist()
         self._invalidate()
@@ -551,30 +566,45 @@ class TemporalVault:
         shutil.rmtree(self._stage_path(tag), ignore_errors=True)
         self._invalidate()
 
-    def _append(self, df: DataFrame, path: str | None = None) -> None:
-        (
-            df.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-            .repartition("dt")
-            .write.mode("append")
-            .partitionBy("dt")
-            .parquet(path or self.records_path)
-        )
+    def _append(self, df: DataFrame, path: str | None = None, sort_by=()) -> None:
+        """The one dt-partitioned writer (appends, staged ingest and
+        ``_replace_log``): ``df`` by its session-zone date into ``path``
+        (the log by default), one file per dt= directory, rows optionally
+        sorted within it."""
+        out = df.withColumn("dt", F.date_format("ts", "yyyy-MM-dd")).repartition("dt")
+        if sort_by:
+            out = out.sortWithinPartitions(*sort_by)
+        out.write.mode("append").partitionBy("dt").parquet(path or self.records_path)
 
-    def _invalidate_snapshots_from(self, ts: datetime) -> None:
-        """A write stamped at-or-before a snapshot's timestamp makes that
-        snapshot stale (it was materialized without the new row, yet claims
-        the state at snap_ts) — snapshot-aware reads would silently miss the
-        version. Found by the model-based property test: record@T, snapshot@T,
-        record@T again → state_at returned v1 instead of v2."""
-        if not os.path.isdir(self.snapshots_path):
-            return
-        for name in os.listdir(self.snapshots_path):
-            try:
-                snap_ts = datetime.strptime(name, "%Y%m%dT%H%M%S")
-            except ValueError:
-                continue
+    def _replace_log(self, df: DataFrame, sort_by=()) -> None:
+        """Atomically replace the log with ``df`` — the one log rewrite
+        (rollback, compact, expire). ``df`` is written into a hidden sibling
+        ``.records_tmp_*`` (Spark's ``_SUCCESS`` marks it complete), then
+        records/ is renamed aside to ``.records_old_*``, the tmp renamed in
+        and the old directory removed. A crash at any step leaves a state
+        that ``_recover_swaps`` repairs to the log before or after the
+        rewrite."""
+        tmp = f"{self.root}/.records_tmp_{uuid.uuid4().hex[:8]}"
+        self._append(df, tmp, sort_by)
+        old = f"{self.root}/.records_old_{uuid.uuid4().hex[:8]}"
+        if os.path.isdir(self.records_path):
+            os.rename(self.records_path, old)
+        os.rename(tmp, self.records_path)
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+        self._invalidate()
+
+    def _drop_snapshots_from(self, ts: datetime) -> None:
+        """Drop every snapshot stamped at or after ``ts``. A write stamped
+        at-or-before a snapshot's timestamp makes that snapshot stale (it was
+        materialized without the new row, yet claims the state at snap_ts) —
+        snapshot-aware reads would silently miss the version. Found by the
+        model-based property test: record@T, snapshot@T, record@T again →
+        state_at returned v1 instead of v2. Writers call this before their
+        data lands, so a crash in between leaves no stale snapshot."""
+        for snap_ts, path in self._snapshots():
             if snap_ts >= ts:
-                shutil.rmtree(f"{self.snapshots_path}/{name}")
+                shutil.rmtree(path)
 
     # -- read paths (reference main.py:103-152) ------------------------------
 
@@ -590,11 +620,7 @@ class TemporalVault:
         if cache and key in self._cache:
             self._timed("query_cache_hit", t0)
             return self._cache[key]
-        out = (
-            self.log(until=ts)
-            .select("id", "record_id", "version", "data", "ts")
-            .orderBy(F.desc("ts"), F.desc("id"))
-        )
+        out = asof_all_versions(self.log(until=ts), ts)
         if cache:
             # bounded cache (the reference used a 1h Redis TTL, main.py:147):
             # FIFO-evict + unpersist beyond _CACHE_MAX distinct timestamps so
@@ -621,18 +647,7 @@ class TemporalVault:
         else:
             # tail read is partition-pruned: only dt >= date(snap_ts) dirs
             log = snap_df.unionByName(self.log(until=ts, since_exclusive=snap_ts))
-        # ts/id tie-breakers: after a rollback the log can hold several rows
-        # with the SAME (record_id, version_num) (reference-faithful UPDATE
-        # keeps rewritten rows); their payloads are identical but id/ts
-        # differ, so the pick must still be deterministic
-        w = Window.partitionBy("record_id").orderBy(
-            F.desc("version_num"), F.desc("ts"), F.desc("id")
-        )
-        out = (
-            log.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("id", "record_id", "version", "version_num", "data", "ts", "previous_version")
-        )
+        out = latest_per_key(log)
         self._timed("state_at", t0)
         return out
 
@@ -642,37 +657,44 @@ class TemporalVault:
         """Materialize state_at(T) to snapshots/<iso>/ (the declared-but-dead
         snapshots table, models.py:27-38, actually implemented)."""
         ts = parse_time(timestamp)
-        name = ts.strftime("%Y%m%dT%H%M%S")
-        path = f"{self.snapshots_path}/{name}"
+        path = f"{self.snapshots_path}/{ts.strftime(_SNAPSHOT_NAME)}"
         self.state_at(ts).write.mode("overwrite").parquet(path)
         return path
 
-    def _nearest_snapshot(self, ts: datetime):
+    def _snapshots(self) -> list[tuple[datetime, str]]:
+        """(snap_ts, path) of every snapshot, oldest first — the one reader
+        of snapshot directory names."""
         if not os.path.isdir(self.snapshots_path):
-            return None, None
-        best = None
-        for name in sorted(os.listdir(self.snapshots_path)):
+            return []
+        out = []
+        for name in os.listdir(self.snapshots_path):
             try:
-                snap_ts = datetime.strptime(name, "%Y%m%dT%H%M%S")
+                snap_ts = datetime.strptime(name, _SNAPSHOT_NAME)
             except ValueError:
                 continue
-            if snap_ts <= ts and (best is None or snap_ts > best):
-                best = snap_ts
-        if best is None:
+            out.append((snap_ts, f"{self.snapshots_path}/{name}"))
+        return sorted(out)
+
+    def _nearest_snapshot(self, ts: datetime):
+        """(snap_ts, DataFrame) of the newest snapshot at or before ts, or
+        (None, None)."""
+        older = [(snap_ts, path) for snap_ts, path in self._snapshots() if snap_ts <= ts]
+        if not older:
             return None, None
-        path = f"{self.snapshots_path}/{best.strftime('%Y%m%dT%H%M%S')}"
-        return best, self.spark.read.schema(RECORD_SCHEMA).parquet(path)
+        snap_ts, path = older[-1]
+        return snap_ts, self.spark.read.schema(RECORD_SCHEMA).parquet(path)
 
     # -- rollback (reference main.py:154-248) --------------------------------
 
     def rollback(self, timestamp) -> dict:
-        """Roll the table back to T: audit first (count + affected keys,
-        main.py:174-188), then one job computes the post-rollback table —
-        pre-T rows unchanged; post-T rows of keys alive at T rewritten to the
-        as-of state's data AND version labels (version/version_num/
-        previous_version, matching the reference UPDATE main.py:200-214);
-        keys born after T dropped (main.py:217-224) — and atomically replaces
-        the log directory. One shuffle replaces the reference's per-record
+        """Roll the table back to T: audit first (one aggregate job: count +
+        affected keys, main.py:174-188), then one rewrite job writes the
+        post-rollback table — pre-T rows unchanged; post-T rows of keys alive
+        at T rewritten to the as-of state's data AND version labels
+        (version/version_num/previous_version, matching the reference UPDATE
+        main.py:200-214);
+        keys born after T dropped (main.py:217-224) — and ``_replace_log``
+        swaps it in. One shuffle replaces the reference's per-record
         UPDATE/DELETE loop. Deliberate deviation: the reference stamps
         rewritten rows timestamp=CURRENT_TIMESTAMP (main.py:204), which makes
         a rolled-back row look newer than the rollback target and breaks
@@ -725,36 +747,18 @@ class TemporalVault:
         )
         new_log = kept.unionByName(rewritten)
 
-        tmp = f"{self.root}/.records_tmp_{uuid.uuid4().hex[:8]}"
-        (
-            new_log.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-            .repartition("dt")
-            .write.mode("overwrite")
-            .partitionBy("dt")
-            .parquet(tmp)
-        )
-        old = f"{self.root}/.records_old_{uuid.uuid4().hex[:8]}"
-        with self._mutating():
-            if os.path.isdir(self.records_path):
-                os.rename(self.records_path, old)
-            os.rename(tmp, self.records_path)
-        # rewritten labels and dropped keys lower maxima: rebuild on next write
-        self._latest = None
-        if os.path.isdir(old):
-            shutil.rmtree(old)
         # snapshots materialized AFTER the rollback target contain
         # rolled-back rows — keeping them would resurrect deleted keys on the
         # next snapshot-aware state_at(); snapshots <= ts are still exact
-        # (rollback never touches pre-ts history)
-        if os.path.isdir(self.snapshots_path):
-            for name in os.listdir(self.snapshots_path):
-                try:
-                    snap_ts = datetime.strptime(name, "%Y%m%dT%H%M%S")
-                except ValueError:
-                    continue
-                if snap_ts > ts:
-                    shutil.rmtree(f"{self.snapshots_path}/{name}")
-        self._invalidate()
+        # (rollback never touches pre-ts history). ts and snapshot names both
+        # have whole seconds (parse_time truncates), so "from ts + 1 s" is
+        # exactly "after ts". Dropped before the swap: a crash in between
+        # leaves the old log with fewer snapshots, never a stale one.
+        self._drop_snapshots_from(ts + timedelta(seconds=1))
+        with self._mutating():
+            self._replace_log(new_log)
+        # rewritten labels and dropped keys lower maxima: rebuild on next write
+        self._latest = None
         self._timed("rollback", t0)
         return {
             "rolled_back_to": ts.isoformat(),
@@ -768,9 +772,9 @@ class TemporalVault:
         file; at an append-heavy 100 TB log the file count — not the byte
         count — is what kills scan planning (footer reads, task scheduling).
         The sort restores key locality, so parquet min/max stats on
-        record_id prune key-filtered reads (the index role). Same atomic
-        directory-swap as rollback; contents are row-identical, so readers
-        never observe a difference."""
+        record_id prune key-filtered reads (the index role). The rewrite is
+        ``_replace_log``'s; contents are row-identical, so readers never
+        observe a difference."""
         t0 = time.perf_counter()
         self._recover_swaps()
         if not self._has_records():
@@ -779,21 +783,7 @@ class TemporalVault:
             len([f for f in files if f.endswith(".parquet")])
             for _, _, files in os.walk(self.records_path)
         )
-        log = self.log()
-        tmp = f"{self.root}/.records_tmp_{uuid.uuid4().hex[:8]}"
-        (
-            log.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-            .repartition(F.col("dt"))
-            .sortWithinPartitions("record_id", "version_num")
-            .write.mode("overwrite")
-            .partitionBy("dt")
-            .parquet(tmp)
-        )
-        old = f"{self.root}/.records_old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.records_path, old)
-        os.rename(tmp, self.records_path)
-        shutil.rmtree(old)
-        self._invalidate()
+        self._replace_log(self.log(), sort_by=("record_id", "version_num"))
         after = sum(
             len([f for f in files if f.endswith(".parquet")])
             for _, _, files in os.walk(self.records_path)
@@ -810,7 +800,7 @@ class TemporalVault:
         if not os.path.isfile(p):
             return None
         with open(p) as f:
-            return datetime.fromisoformat(f.read().strip())
+            return parse_time(f.read().strip())
 
     def _check_floor(self, ts: datetime, op: str) -> None:
         floor = self.retention_floor()
@@ -834,11 +824,10 @@ class TemporalVault:
         append-only store needs once the log outgrows its useful history;
         the reference has no analog (its log grows forever).
 
-        One job: tag keep = (ts >= cutoff) OR (row_number()=1 over
-        (key, version_num DESC) among pre-cutoff rows) — the same single
-        per-key shuffle every temporal op pays — then the rollback/compact
-        atomic directory swap. Time travel below the cutoff is gone BY
-        DESIGN, so the cutoff persists as a floor marker (_retention) and
+        One rewrite job: keep = (ts >= cutoff) plus ``latest_per_key`` of
+        the pre-cutoff rows — the same single per-key shuffle every temporal
+        op pays — swapped in by ``_replace_log``. Time travel below the
+        cutoff is gone BY DESIGN, so the cutoff persists as a floor marker (_retention) and
         query()/state_at() below it raise instead of silently returning
         collapsed history. Snapshots are untouched: a snapshot at ts0 stays
         exact for reads >= cutoff (per-key latest rows it contributes are
@@ -858,39 +847,19 @@ class TemporalVault:
         if not self._has_records():
             return {"cutoff": cutoff.isoformat(), "n_expired": 0, "n_kept": 0}
         log = self.log()
-        pre = log.filter(F.col("ts") < F.lit(cutoff))
-        w = Window.partitionBy("record_id").orderBy(
-            F.desc("version_num"), F.desc("ts"), F.desc("id")
-        )
-        baseline = (
-            pre.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        baseline = latest_per_key(log.filter(F.col("ts") < F.lit(cutoff)))
         kept = log.filter(F.col("ts") >= F.lit(cutoff)).unionByName(baseline)
         n_total = log.count()
-        tmp = f"{self.root}/.records_tmp_{uuid.uuid4().hex[:8]}"
-        (
-            kept.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-            .repartition("dt")
-            .write.mode("overwrite")
-            .partitionBy("dt")
-            .parquet(tmp)
-        )
         # (the floor marker was written up front, BEFORE the swap: a crash
         # between the swap and a post-swap marker write would leave
         # truncated history with no floor — reads below the cutoff would
         # silently return collapsed state. Marker-first fails in the safe
         # direction: crash after marker, before swap → history intact,
         # sub-cutoff reads refused — conservative, never wrong.)
-        old = f"{self.root}/.records_old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.records_path, old)
-        os.rename(tmp, self.records_path)
-        shutil.rmtree(old)
+        self._replace_log(kept)
         n_kept = self.spark.read.schema(RECORD_SCHEMA).parquet(
             self.records_path
         ).count()
-        self._invalidate()
         self._timed("expire", t0)
         return {
             "cutoff": cutoff.isoformat(),

@@ -19,15 +19,19 @@ TS = {
 T_MID = datetime(2026, 1, 2, 0, 0, 0)
 
 
-@pytest.fixture()
-def vault(spark, tmp_path):
-    v = TemporalVault(spark, str(tmp_path / "vault"))
+def _fixture_vault(spark, root):
+    v = TemporalVault(spark, root)
     v.record("a", {"x": "1", "y": "2"}, TS["a1"])
     v.record("c", "not-json plain string", TS["c1"])
     v.record("a", {"x": "1", "y": "9"}, TS["a2"])
     v.record("b", {"k": "1"}, TS["b1"])
     v.record("a", {"x": "1", "z": "5"}, TS["a3"])
     return v
+
+
+@pytest.fixture()
+def vault(spark, tmp_path):
+    return _fixture_vault(spark, str(tmp_path / "vault"))
 
 
 def test_version_assignment_per_key(vault):
@@ -547,3 +551,130 @@ def test_floor_guards_compare_and_rollback(vault):
     assert vault.history(100).count() == n_hist  # no phantom audit entry
     diff = vault.compare("a")  # defaults: baseline -> latest, still exact
     assert isinstance(diff, dict) and diff  # runs clean, returns a real diff
+
+
+def _rows(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_tz_aware_times_act_like_their_naive_local_instant(spark, tmp_path):
+    """record(ts=aware) beside a snapshot, state_at(aware) and expire(aware)
+    followed by reads give what the same calls with the naive local time of
+    the same instant give."""
+    east = timezone(timedelta(hours=5))
+
+    def naive(t):
+        return datetime.fromtimestamp(t.timestamp())
+
+    rec_ts = T_MID.astimezone(east)  # the snapshot's instant: drops it
+    probe = datetime(2026, 1, 2, 12, 0, 0).astimezone(east)
+    cutoff = datetime(2026, 1, 2, 6, 0, 0).astimezone(east)
+    vaults = {}
+    for kind, conv in (("aware", lambda t: t), ("naive", naive)):
+        v = _fixture_vault(spark, str(tmp_path / kind))
+        v.snapshot(T_MID)
+        row = v.record("a", {"x": "tz"}, conv(rec_ts))
+        out = {
+            "row": (row["version"], row["ts"]),
+            "snapshots": [t for t, _ in v._snapshots()],
+            "state": _rows(v.state_at(conv(probe)), "record_id", "version", "data"),
+        }
+        v.expire(conv(cutoff))
+        out["floor"] = v.retention_floor()
+        out["log"] = _rows(v.log(), "record_id", "version", "data", "ts")
+        out["query"] = _rows(v.query(conv(probe)), "record_id", "version", "data", "ts")
+        out["compare"] = v.compare("a", conv(cutoff), conv(probe))
+        vaults[kind] = out
+    assert vaults["aware"] == vaults["naive"]
+    assert vaults["naive"]["row"] == ("v4", naive(rec_ts))
+    assert vaults["naive"]["snapshots"] == []
+
+
+def test_snapshot_boundaries(vault):
+    """rollback(T) keeps a snapshot stamped exactly T (it holds no
+    rolled-back row) and drops one stamped T + 1 s; a write stamped T drops
+    a snapshot stamped T, a write stamped T + 1 s keeps it."""
+    one = timedelta(seconds=1)
+    vault.snapshot(T_MID)
+    vault.snapshot(T_MID + one)
+    vault.rollback(T_MID)
+    assert [t for t, _ in vault._snapshots()] == [T_MID]
+    vault.record("c", {"late": "1"}, T_MID + one)
+    assert [t for t, _ in vault._snapshots()] == [T_MID]
+    vault.record("c", {"at": "1"}, T_MID)
+    assert vault._snapshots() == []
+
+
+_SWAP_OPS = {
+    "rollback": lambda v: v.rollback(T_MID),
+    "compact": lambda v: v.compact(),
+    "expire": lambda v: v.expire(datetime(2026, 1, 2, 6, 0, 0)),
+}
+
+
+@pytest.mark.parametrize("step", ["tmp_write", "rename_out", "rename_in", "rmtree_old"])
+@pytest.mark.parametrize("op", sorted(_SWAP_OPS))
+def test_crash_at_each_swap_step_reopens_to_before_or_after(
+    spark, tmp_path, monkeypatch, op, step
+):
+    """A crash at each step of the log rewrite's swap — the tmp write (no
+    _SUCCESS), records -> old, tmp -> records, removal of the old log —
+    leaves a vault that reopens to exactly the state before the op (crash
+    before the swap's point of no return) or after it, and whose next
+    record() mints the next version of that state. The snapshot after the
+    rollback target must not survive a rollback that crashed late."""
+    import os
+    import shutil
+
+    root = str(tmp_path / "crash")
+    v = _fixture_vault(spark, root)
+    v.snapshot(TS["a3"])
+    shutil.copytree(root, str(tmp_path / "clean"))
+    probes = (TS["b1"], datetime(2026, 1, 4))
+
+    def state(vault):
+        log = _rows(vault.log(), "record_id", "version_num", "data", "ts")
+        asof = [_rows(vault.state_at(p), "record_id", "version", "data") for p in probes]
+        return log, asof
+
+    before = state(v)
+    clean = TemporalVault(spark, str(tmp_path / "clean"))
+    _SWAP_OPS[op](clean)
+    after = state(clean)
+
+    real_append, real_rename, real_rmtree = TemporalVault._append, os.rename, shutil.rmtree
+
+    def crash():
+        raise OSError(f"injected crash at {step}")
+
+    def append(self, df, path=None, sort_by=()):
+        real_append(self, df, path, sort_by)
+        if step == "tmp_write" and path and ".records_tmp_" in path:
+            os.remove(f"{path}/_SUCCESS")  # the job never committed
+            crash()
+
+    def rename(src, dst):
+        if (step == "rename_out" and src == v.records_path) or (
+            step == "rename_in" and ".records_tmp_" in src
+        ):
+            crash()
+        real_rename(src, dst)
+
+    def rmtree(path, *args, **kwargs):
+        if step == "rmtree_old" and ".records_old_" in str(path):
+            crash()
+        real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(TemporalVault, "_append", append)
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    with pytest.raises(OSError, match="injected crash"):
+        _SWAP_OPS[op](v)
+    monkeypatch.undo()
+
+    reopened = TemporalVault(spark, root)
+    assert not [n for n in os.listdir(root) if n.startswith((".records_tmp_", ".records_old_"))]
+    got = state(reopened)
+    assert got == (before if step in ("tmp_write", "rename_out") else after)
+    next_a = 1 + max(n for key, n, _, _ in got[0] if key == "a")
+    assert reopened.record("a", {"x": "next"}, datetime(2026, 1, 5))["version"] == f"v{next_a}"

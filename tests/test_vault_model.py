@@ -2,8 +2,9 @@
 rollback, snapshot, expire and compact executed both by TemporalVault (Spark,
 parquet, real writes) and by a small pure-Python model of the reference's
 semantics (append-only versions, rollback = rewrite post-T data + drop
-born-after-T keys). Any divergence in the full log, any as-of state or the
-vault's version map after any op is a bug in one of them."""
+born-after-T keys). Any divergence in the full log, any as-of state, the
+all-versions query, compare's as-of versions or the vault's version map
+after any op is a bug in one of them."""
 
 import json
 from datetime import datetime, timedelta
@@ -188,3 +189,18 @@ def test_vault_matches_model(spark, tmp_path_factory, ops):
             for r in vault.state_at(probe).collect()
         }
         assert got_state == model.state_at(probe)
+        # the all-versions view: every row with ts <= probe
+        got_all = sorted(
+            (r["record_id"], r["version"], r["data"], r["ts"])
+            for r in vault.query(probe, cache=False).collect()
+        )
+        assert got_all == sorted(
+            (key, f"v{vnum}", data, ts) for key, vnum, data, ts in model.rows if ts <= probe
+        )
+
+    if floor is None or TS_GRID[2] >= floor:
+        start, end = model.state_at(TS_GRID[2]), model.state_at(TS_GRID[5])
+        for key in KEYS + ["k4"]:
+            got = vault.compare(key, TS_GRID[2], TS_GRID[5])
+            want = [f"v{m[key][0]}" if key in m else None for m in (start, end)]
+            assert [got["start_version"], got["end_version"]] == want, key

@@ -14,10 +14,12 @@ from __future__ import annotations
 
 import fnmatch
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def run(sf_dir: str, out: str | None, patterns: list[str] | None = None) -> int:
@@ -89,7 +91,7 @@ def run(sf_dir: str, out: str | None, patterns: list[str] | None = None) -> int:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/CORRECTNESS_LOCAL.json"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "CORRECTNESS_LOCAL.json")
     patterns = sys.argv[3:] or None
     return run(sf_dir, out, patterns)
 

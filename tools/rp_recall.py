@@ -20,11 +20,12 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 COSINES = [0.99, 0.97, 0.95, 0.90, 0.85, 0.80, 0.70, 0.60, 0.45]
 DIM = 64

@@ -36,7 +36,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
 ID_OFF = 10_000_000
@@ -140,7 +141,7 @@ def main() -> None:
     import temporalvault_spark.operators  # noqa: F401
     from temporalvault_spark.registry import QUERIES
 
-    with open("/root/repo/BENCH_LOCAL.json") as f:
+    with open(os.path.join(REPO, "BENCH_LOCAL.json")) as f:
         bench = json.load(f)
     slow = [
         name

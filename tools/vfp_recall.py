@@ -25,11 +25,12 @@ Writes /tmp/vfp_recall_result.json and prints the SCALE.md markdown table.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from temporalvault_spark.operators.videohash import (  # noqa: E402
     VFP_THRESHOLD,
