@@ -17,10 +17,14 @@ Storage layout under ``root``:
                  latest version (see below)
 
 Scale notes: every read is a declarative plan over the partitioned log —
-as-of state is one window shuffle bounded below by the newest snapshot;
-rollback is an audit aggregate plus one rewrite job (state + inner join,
-then the atomic directory swap) instead of the reference's
-2-round-trips-per-record loop (main.py:191-224).
+as-of state is one window shuffle bounded below by the newest snapshot.
+Every log rewrite touches only the dt= partitions it changes: rollback(T)
+reads, audits and rewrites the partitions from date(T) on (an audit
+aggregate plus one rewrite job: state + inner join), expire the partitions
+up to the cutoff's date, compact the partitions holding several files; the
+rest of the log is hard-linked into the new directory before the atomic
+swap. That replaces the reference's 2-round-trips-per-record loop
+(main.py:191-224), which likewise touches only the rows after the target.
 
 Each piece of temporal semantics has one implementation: latest-per-key is
 ``operators.temporal.latest_per_key`` (state_at, expire's baselines and the
@@ -118,6 +122,11 @@ def _write_parquet(directory: str, table: pa.Table) -> None:
     pq.write_table(table, tmp)
     os.replace(tmp, f"{directory}/{name}")
 
+
+# a rollback's audit row rides its log swap under this name in the new
+# log's root (Spark skips '_' names) until ``_publish_audit`` moves it
+# into rollback_log/
+_PENDING_AUDIT = "_rollback_audit"
 
 _SNAPSHOT_NAME = "%Y%m%dT%H%M%S"  # snapshots/<snap_ts>/, whole seconds
 
@@ -246,17 +255,21 @@ class TemporalVault:
 
     def _recover_swaps(self) -> None:
         """Crash recovery for ``_replace_log``'s two-rename directory swap
-        (tmp write → records->old → tmp->records → rm old). A crash between
-        the two renames leaves no records/ dir with the data stranded in
-        .records_old_*; a crash before/after leaves orphaned .records_tmp_* /
-        .records_old_* dirs that would otherwise accumulate forever. Run at
-        vault open and before every op that rewrites the log:
+        (tmp links + write → records->old → tmp->records → publish audit →
+        rm old). A crash between the two renames leaves no records/ dir with
+        the data stranded in .records_old_*; a crash before/after leaves
+        orphaned .records_tmp_* / .records_old_* dirs that would otherwise
+        accumulate forever. Run at vault open and before every op that
+        rewrites the log:
 
         - records/ missing + a COMPLETE tmp (Spark's _SUCCESS marker, written
           only when the job finished) → the swap had passed the point of no
           return: promote the tmp.
         - records/ missing + no complete tmp → the swap never completed:
           restore the old dir (pre-op state).
+        - a rollback audit row still pending in the live log belongs to a
+          swap that took effect → published; one in a tmp or old dir belongs
+          to a swap that did not (or is already published) → removed with it.
         - everything left over after that is garbage from finished or failed
           ops → removed."""
         olds = sorted(
@@ -275,6 +288,7 @@ class TemporalVault:
             else:
                 os.rename(olds[-1], self.records_path)
                 olds.pop()
+        self._publish_audit()
         for d in olds + tmps:
             if os.path.isdir(d):
                 shutil.rmtree(d)
@@ -296,22 +310,55 @@ class TemporalVault:
         matching partition predicate explicitly — this is the B-tree-index
         role of the layout (reference models.py:21-24): an as-of read at T
         touches only partitions dt <= date(T), and a snapshot-tail read at S
-        only partitions dt >= date(S)."""
+        only partitions dt >= date(S), dates taken in the session zone that
+        names the partitions (``_dt_of``)."""
         if not self._has_records():
             return self.spark.createDataFrame([], RECORD_SCHEMA)
-        df = self.spark.read.schema(
-            T.StructType(RECORD_SCHEMA.fields + [T.StructField("dt", T.StringType())])
-        ).parquet(self.records_path)
+        df = self._scan()
         if until is not None:
-            df = df.filter(
-                (F.col("dt") <= until.strftime("%Y-%m-%d")) & (F.col("ts") <= F.lit(until))
-            )
+            df = df.filter((F.col("dt") <= self._dt_of(until)) & (F.col("ts") <= F.lit(until)))
         if since_exclusive is not None:
             df = df.filter(
-                (F.col("dt") >= since_exclusive.strftime("%Y-%m-%d"))
+                (F.col("dt") >= self._dt_of(since_exclusive))
                 & (F.col("ts") > F.lit(since_exclusive))
             )
         return df.drop("dt")
+
+    def _scan(self) -> DataFrame:
+        """The log with its ``dt`` partition column."""
+        return self.spark.read.schema(
+            T.StructType(RECORD_SCHEMA.fields + [T.StructField("dt", T.StringType())])
+        ).parquet(self.records_path)
+
+    def _read_partitions(self, dts) -> DataFrame:
+        """The rows of the log's ``dt=`` partitions ``dts``, read pruned to
+        them (empty-typed when none is named)."""
+        if not dts:
+            return self.spark.createDataFrame([], RECORD_SCHEMA)
+        return self._scan().filter(F.col("dt").isin(sorted(dts))).drop("dt")
+
+    def _partitions(self) -> dict[str, list[str]]:
+        """dt -> the paths of the data files in the log's ``dt=`` directory
+        (the Parquet files Spark's listing reads: it skips '.'/'_' names)."""
+        if not os.path.isdir(self.records_path):
+            return {}
+        out = {}
+        for name in os.listdir(self.records_path):
+            d = f"{self.records_path}/{name}"
+            if name.startswith("dt=") and os.path.isdir(d):
+                out[name[3:]] = [
+                    f"{d}/{f}"
+                    for f in os.listdir(d)
+                    if f.endswith(".parquet") and not f.startswith((".", "_"))
+                ]
+        return out
+
+    def _dt_of(self, ts: datetime) -> str:
+        """The ``dt=`` partition of the naive instant ``ts``: its date in the
+        session zone, which names the partitions (naive values are local
+        time, as ``TimestampType.toInternal`` reads them)."""
+        us = T.TimestampType().toInternal(ts)
+        return datetime.fromtimestamp(us // 1_000_000, self._session_tz()).strftime("%Y-%m-%d")
 
     # -- write path (reference main.py:68-100) -------------------------------
 
@@ -342,12 +389,9 @@ class TemporalVault:
             "ts": ts,
             "previous_version": f"v{num - 1}" if num > 1 else None,
         }
-        table = _arrow_table([row], RECORD_SCHEMA)
-        us = table.column("ts")[0].value
-        dt = datetime.fromtimestamp(us // 1_000_000, self._session_tz()).strftime("%Y-%m-%d")
         self._drop_snapshots_from(ts)
         with self._mutating():
-            _write_parquet(f"{self.records_path}/dt={dt}", table)
+            _write_parquet(f"{self.records_path}/dt={self._dt_of(ts)}", _arrow_table([row], RECORD_SCHEMA))
         latest[record_id] = num
         self._invalidate()
         self._timed("record", t0)
@@ -566,33 +610,62 @@ class TemporalVault:
         shutil.rmtree(self._stage_path(tag), ignore_errors=True)
         self._invalidate()
 
-    def _append(self, df: DataFrame, path: str | None = None, sort_by=()) -> None:
+    def _append(self, df: DataFrame, path: str | None = None) -> None:
         """The one dt-partitioned writer (appends, staged ingest and
         ``_replace_log``): ``df`` by its session-zone date into ``path``
-        (the log by default), one file per dt= directory, rows optionally
-        sorted within it."""
-        out = df.withColumn("dt", F.date_format("ts", "yyyy-MM-dd")).repartition("dt")
-        if sort_by:
-            out = out.sortWithinPartitions(*sort_by)
-        out.write.mode("append").partitionBy("dt").parquet(path or self.records_path)
+        (the log by default), one file per dt= directory, its rows sorted by
+        (record_id, version_num). Every file of the log is therefore sorted
+        (``record()``'s files hold one row), so a partition with one file is
+        already compact. ``dt`` leads the sort, so the writer adds none."""
+        (
+            df.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
+            .repartition("dt")
+            .sortWithinPartitions("dt", "record_id", "version_num")
+            .write.mode("append")
+            .partitionBy("dt")
+            .parquet(path or self.records_path)
+        )
 
-    def _replace_log(self, df: DataFrame, sort_by=()) -> None:
-        """Atomically replace the log with ``df`` — the one log rewrite
-        (rollback, compact, expire). ``df`` is written into a hidden sibling
-        ``.records_tmp_*`` (Spark's ``_SUCCESS`` marks it complete), then
-        records/ is renamed aside to ``.records_old_*``, the tmp renamed in
-        and the old directory removed. A crash at any step leaves a state
-        that ``_recover_swaps`` repairs to the log before or after the
-        rewrite."""
+    def _replace_log(self, df: DataFrame, dts, audit: pa.Table | None = None) -> None:
+        """Atomically replace the log's ``dt=`` partitions ``dts`` with the
+        rows of ``df``, each of which must belong in one of them — the one
+        log rewrite (rollback, compact, expire; naming every partition
+        rewrites the whole log). The new log is built in a hidden sibling
+        ``.records_tmp_*``: every data file of every other partition is
+        hard-linked in (``os.link``, so records/ and the tmp must share one
+        local filesystem), then one Spark write adds ``df``, whose
+        ``_SUCCESS`` lands last and marks the tmp complete. records/ is then
+        renamed aside to ``.records_old_*``, the tmp renamed in and the old
+        directory removed. A rollback passes its ``audit`` row, which rides
+        the swap inside the tmp and is published to rollback_log/ only once
+        the tmp is the live log. A crash at any step leaves a state that
+        ``_recover_swaps`` repairs to the log before or after the rewrite."""
         tmp = f"{self.root}/.records_tmp_{uuid.uuid4().hex[:8]}"
-        self._append(df, tmp, sort_by)
+        os.makedirs(tmp)
+        if audit is not None:
+            pq.write_table(audit, f"{tmp}/{_PENDING_AUDIT}")
+        for dt, files in self._partitions().items():
+            if dt not in dts:
+                os.makedirs(f"{tmp}/dt={dt}")
+                for f in files:
+                    os.link(f, f"{tmp}/dt={dt}/{os.path.basename(f)}")
+        self._append(df, tmp)
         old = f"{self.root}/.records_old_{uuid.uuid4().hex[:8]}"
         if os.path.isdir(self.records_path):
             os.rename(self.records_path, old)
         os.rename(tmp, self.records_path)
+        self._publish_audit()
         if os.path.isdir(old):
             shutil.rmtree(old)
         self._invalidate()
+
+    def _publish_audit(self) -> None:
+        """Move the audit row of a rollback whose swap took effect from the
+        live log into rollback_log/, where ``history()`` reads it."""
+        pending = f"{self.records_path}/{_PENDING_AUDIT}"
+        if os.path.exists(pending):
+            os.makedirs(self.rollback_log_path, exist_ok=True)
+            os.rename(pending, f"{self.rollback_log_path}/part-{uuid.uuid4().hex}.parquet")
 
     def _drop_snapshots_from(self, ts: datetime) -> None:
         """Drop every snapshot stamped at or after ``ts``. A write stamped
@@ -687,78 +760,87 @@ class TemporalVault:
     # -- rollback (reference main.py:154-248) --------------------------------
 
     def rollback(self, timestamp) -> dict:
-        """Roll the table back to T: audit first (one aggregate job: count +
-        affected keys, main.py:174-188), then one rewrite job writes the
-        post-rollback table — pre-T rows unchanged; post-T rows of keys alive
+        """Roll the table back to T. Rows with ts > T live only in the
+        partitions from date(T) on (session zone), so rollback reads, audits
+        and rewrites only those: one aggregate job audits them (count +
+        affected keys, main.py:174-188), then one rewrite job writes their
+        post-rollback rows — pre-T rows unchanged; post-T rows of keys alive
         at T rewritten to the as-of state's data AND version labels
         (version/version_num/previous_version, matching the reference UPDATE
-        main.py:200-214);
-        keys born after T dropped (main.py:217-224) — and ``_replace_log``
-        swaps it in. One shuffle replaces the reference's per-record
-        UPDATE/DELETE loop. Deliberate deviation: the reference stamps
-        rewritten rows timestamp=CURRENT_TIMESTAMP (main.py:204), which makes
-        a rolled-back row look newer than the rollback target and breaks
-        subsequent as-of reads; we preserve each row's original ts instead."""
+        main.py:200-214); keys born after T dropped (main.py:217-224) — and
+        ``_replace_log`` swaps them in, hard-linking the earlier partitions.
+        One shuffle replaces the reference's per-record UPDATE/DELETE loop.
+        With no row after T the log is left alone and only the audit row is
+        written. Otherwise the audit row rides the swap and shows in
+        ``history()`` only once the swap took effect. Deliberate deviation:
+        the reference stamps rewritten rows timestamp=CURRENT_TIMESTAMP
+        (main.py:204), which makes a rolled-back row look newer than the
+        rollback target and breaks subsequent as-of reads; we preserve each
+        row's original ts instead."""
         t0 = time.perf_counter()
         self._recover_swaps()
         ts = parse_time(timestamp)
-        # refuse BEFORE the audit append: a floor violation surfacing later
-        # (inside state_at) would leave a phantom rollback_log entry for a
-        # rollback that never happened
+        # refuse BEFORE the audit: below the floor, state_at would raise only
+        # after the audit job had run
         self._check_floor(ts, "rollback")
-        log = self.log()
+        scope = {dt for dt in self._partitions() if dt >= self._dt_of(ts)}
+        log = self._read_partitions(scope)
         affected = log.filter(F.col("ts") > F.lit(ts))
         audit = affected.agg(
             F.count("*").alias("n_affected"),
             F.array_sort(F.collect_set("record_id")).alias("affected_keys"),
         ).collect()[0]
-        audit_row = {
-            "ts": datetime.now().replace(microsecond=0),
-            "rollback_to": ts,
-            "n_affected": audit["n_affected"],
-            "rollback_data": json.dumps({"record_ids": list(audit["affected_keys"])}),
-        }
-        _write_parquet(self.rollback_log_path, _arrow_table([audit_row], AUDIT_SCHEMA))
-
-        # post-T rows of surviving keys are rewritten to the target version's
-        # data AND labels (version / version_num / previous_version), exactly
-        # like the reference UPDATE (main.py:200-214); only the reference's
-        # timestamp=CURRENT_TIMESTAMP is deviated from (ts preserved — see
-        # docstring)
-        state = self.state_at(ts).select(
-            "record_id",
-            F.col("data").alias("asof_data"),
-            F.col("version").alias("asof_version"),
-            F.col("version_num").alias("asof_version_num"),
-            F.col("previous_version").alias("asof_previous_version"),
+        audit_row = _arrow_table(
+            [{
+                "ts": datetime.now().replace(microsecond=0),
+                "rollback_to": ts,
+                "n_affected": audit["n_affected"],
+                "rollback_data": json.dumps({"record_ids": list(audit["affected_keys"])}),
+            }],
+            AUDIT_SCHEMA,
         )
-        kept = log.filter(F.col("ts") <= F.lit(ts))
-        rewritten = (
-            affected.join(state, "record_id", "inner")
-            .withColumns(
-                {
-                    "data": F.col("asof_data"),
-                    "version": F.col("asof_version"),
-                    "version_num": F.col("asof_version_num"),
-                    "previous_version": F.col("asof_previous_version"),
-                }
+        if not audit["n_affected"]:
+            _write_parquet(self.rollback_log_path, audit_row)
+        else:
+            # post-T rows of surviving keys are rewritten to the target
+            # version's data AND labels (version / version_num /
+            # previous_version), exactly like the reference UPDATE
+            # (main.py:200-214); only the reference's
+            # timestamp=CURRENT_TIMESTAMP is deviated from (ts preserved —
+            # see docstring)
+            state = self.state_at(ts).select(
+                "record_id",
+                F.col("data").alias("asof_data"),
+                F.col("version").alias("asof_version"),
+                F.col("version_num").alias("asof_version_num"),
+                F.col("previous_version").alias("asof_previous_version"),
             )
-            .select([f.name for f in RECORD_SCHEMA.fields])
-        )
-        new_log = kept.unionByName(rewritten)
-
-        # snapshots materialized AFTER the rollback target contain
-        # rolled-back rows — keeping them would resurrect deleted keys on the
-        # next snapshot-aware state_at(); snapshots <= ts are still exact
-        # (rollback never touches pre-ts history). ts and snapshot names both
-        # have whole seconds (parse_time truncates), so "from ts + 1 s" is
-        # exactly "after ts". Dropped before the swap: a crash in between
-        # leaves the old log with fewer snapshots, never a stale one.
-        self._drop_snapshots_from(ts + timedelta(seconds=1))
-        with self._mutating():
-            self._replace_log(new_log)
-        # rewritten labels and dropped keys lower maxima: rebuild on next write
-        self._latest = None
+            rewritten = (
+                affected.join(state, "record_id", "inner")
+                .withColumns(
+                    {
+                        "data": F.col("asof_data"),
+                        "version": F.col("asof_version"),
+                        "version_num": F.col("asof_version_num"),
+                        "previous_version": F.col("asof_previous_version"),
+                    }
+                )
+                .select([f.name for f in RECORD_SCHEMA.fields])
+            )
+            new_rows = log.filter(F.col("ts") <= F.lit(ts)).unionByName(rewritten)
+            # snapshots materialized AFTER the rollback target contain
+            # rolled-back rows — keeping them would resurrect deleted keys on
+            # the next snapshot-aware state_at(); snapshots <= ts are still
+            # exact (rollback never touches pre-ts history). ts and snapshot
+            # names both have whole seconds (parse_time truncates), so "from
+            # ts + 1 s" is exactly "after ts". Dropped before the swap: a
+            # crash in between leaves the old log with fewer snapshots, never
+            # a stale one.
+            self._drop_snapshots_from(ts + timedelta(seconds=1))
+            with self._mutating():
+                self._replace_log(new_rows, scope, audit=audit_row)
+            # rewritten labels and dropped keys lower maxima: rebuild on next write
+            self._latest = None
         self._timed("rollback", t0)
         return {
             "rolled_back_to": ts.isoformat(),
@@ -767,29 +849,26 @@ class TemporalVault:
         }
 
     def compact(self) -> dict:
-        """Rewrite the version log to ~one file per dt= directory, rows
-        sorted by (record_id, version_num). Single-record appends each add a
-        file; at an append-heavy 100 TB log the file count — not the byte
-        count — is what kills scan planning (footer reads, task scheduling).
-        The sort restores key locality, so parquet min/max stats on
-        record_id prune key-filtered reads (the index role). The rewrite is
+        """Rewrite every ``dt=`` directory holding two or more files to one
+        file, rows sorted by (record_id, version_num). Single-record appends
+        each add a file; at an append-heavy 100 TB log the file count — not
+        the byte count — is what kills scan planning (footer reads, task
+        scheduling). The sort restores key locality, so parquet min/max stats
+        on record_id prune key-filtered reads (the index role). Every file
+        the log's writers make is already sorted, so a partition with one
+        file is compact and is left alone (hard-linked by the rewrite); on a
+        compact log this runs no Spark job. The rewrite is
         ``_replace_log``'s; contents are row-identical, so readers never
         observe a difference."""
         t0 = time.perf_counter()
         self._recover_swaps()
-        if not self._has_records():
-            return {"files_before": 0, "files_after": 0}
-        before = sum(
-            len([f for f in files if f.endswith(".parquet")])
-            for _, _, files in os.walk(self.records_path)
-        )
-        self._replace_log(self.log(), sort_by=("record_id", "version_num"))
-        after = sum(
-            len([f for f in files if f.endswith(".parquet")])
-            for _, _, files in os.walk(self.records_path)
-        )
+        parts = self._partitions()
+        scope = {dt for dt, files in parts.items() if len(files) > 1}
+        if scope:
+            self._replace_log(self._read_partitions(scope), scope)
+        after = sum(map(len, self._partitions().values()))
         self._timed("compact", t0)
-        return {"files_before": before, "files_after": after}
+        return {"files_before": sum(map(len, parts.values())), "files_after": after}
 
     # -- retention ------------------------------------------------------------
 
@@ -824,10 +903,13 @@ class TemporalVault:
         append-only store needs once the log outgrows its useful history;
         the reference has no analog (its log grows forever).
 
-        One rewrite job: keep = (ts >= cutoff) plus ``latest_per_key`` of
+        Rows before the cutoff live only in the partitions up to the
+        cutoff's date (session zone), so only those are read and rewritten:
+        keep = their rows at or after the cutoff plus ``latest_per_key`` of
         the pre-cutoff rows — the same single per-key shuffle every temporal
-        op pays — swapped in by ``_replace_log``. Time travel below the
-        cutoff is gone BY DESIGN, so the cutoff persists as a floor marker (_retention) and
+        op pays — swapped in by ``_replace_log``, the later partitions
+        hard-linked. Time travel below the cutoff is gone BY DESIGN, so the
+        cutoff persists as a floor marker (_retention) and
         query()/state_at() below it raise instead of silently returning
         collapsed history. Snapshots are untouched: a snapshot at ts0 stays
         exact for reads >= cutoff (per-key latest rows it contributes are
@@ -846,20 +928,20 @@ class TemporalVault:
                 f.write(cutoff.isoformat())
         if not self._has_records():
             return {"cutoff": cutoff.isoformat(), "n_expired": 0, "n_kept": 0}
-        log = self.log()
+        scope = {dt for dt in self._partitions() if dt <= self._dt_of(cutoff)}
+        log = self._read_partitions(scope)
         baseline = latest_per_key(log.filter(F.col("ts") < F.lit(cutoff)))
         kept = log.filter(F.col("ts") >= F.lit(cutoff)).unionByName(baseline)
-        n_total = log.count()
+        n_total = self.log().count()
         # (the floor marker was written up front, BEFORE the swap: a crash
         # between the swap and a post-swap marker write would leave
         # truncated history with no floor — reads below the cutoff would
         # silently return collapsed state. Marker-first fails in the safe
         # direction: crash after marker, before swap → history intact,
         # sub-cutoff reads refused — conservative, never wrong.)
-        self._replace_log(kept)
-        n_kept = self.spark.read.schema(RECORD_SCHEMA).parquet(
-            self.records_path
-        ).count()
+        if scope:
+            self._replace_log(kept, scope)
+        n_kept = self.log().count()
         self._timed("expire", t0)
         return {
             "cutoff": cutoff.isoformat(),

@@ -612,17 +612,20 @@ _SWAP_OPS = {
 }
 
 
-@pytest.mark.parametrize("step", ["tmp_write", "rename_out", "rename_in", "rmtree_old"])
+@pytest.mark.parametrize("step", ["link", "tmp_write", "rename_out", "rename_in", "rmtree_old"])
 @pytest.mark.parametrize("op", sorted(_SWAP_OPS))
 def test_crash_at_each_swap_step_reopens_to_before_or_after(
     spark, tmp_path, monkeypatch, op, step
 ):
-    """A crash at each step of the log rewrite's swap — the tmp write (no
+    """A crash at each step of the log rewrite's swap — halfway through
+    hard-linking the untouched partitions into the tmp, the tmp write (no
     _SUCCESS), records -> old, tmp -> records, removal of the old log —
     leaves a vault that reopens to exactly the state before the op (crash
     before the swap's point of no return) or after it, and whose next
     record() mints the next version of that state. The snapshot after the
-    rollback target must not survive a rollback that crashed late."""
+    rollback target must not survive a rollback that crashed late, and a
+    rollback's audit row shows in history() exactly when its swap took
+    effect."""
     import os
     import shutil
 
@@ -638,17 +641,32 @@ def test_crash_at_each_swap_step_reopens_to_before_or_after(
         return log, asof
 
     before = state(v)
-    clean = TemporalVault(spark, str(tmp_path / "clean"))
-    _SWAP_OPS[op](clean)
-    after = state(clean)
-
-    real_append, real_rename, real_rmtree = TemporalVault._append, os.rename, shutil.rmtree
+    real_append, real_rename, real_rmtree, real_link = (
+        TemporalVault._append, os.rename, shutil.rmtree, os.link)
 
     def crash():
         raise OSError(f"injected crash at {step}")
 
-    def append(self, df, path=None, sort_by=()):
-        real_append(self, df, path, sort_by)
+    links, crash_at_link = [], None  # the clean run only counts its links
+
+    def link(src, dst):
+        if len(links) == crash_at_link:
+            crash()
+        links.append(dst)
+        real_link(src, dst)
+
+    clean = TemporalVault(spark, str(tmp_path / "clean"))
+    monkeypatch.setattr(os, "link", link)
+    _SWAP_OPS[op](clean)
+    monkeypatch.undo()
+    after = state(clean)
+    assert links  # every op here leaves a partition to link
+    if step == "link":
+        crash_at_link = len(links) // 2
+    links = []
+
+    def append(self, df, path=None):
+        real_append(self, df, path)
         if step == "tmp_write" and path and ".records_tmp_" in path:
             os.remove(f"{path}/_SUCCESS")  # the job never committed
             crash()
@@ -668,13 +686,133 @@ def test_crash_at_each_swap_step_reopens_to_before_or_after(
     monkeypatch.setattr(TemporalVault, "_append", append)
     monkeypatch.setattr(os, "rename", rename)
     monkeypatch.setattr(shutil, "rmtree", rmtree)
+    monkeypatch.setattr(os, "link", link)
     with pytest.raises(OSError, match="injected crash"):
         _SWAP_OPS[op](v)
     monkeypatch.undo()
+    if step == "link":
+        assert len(links) == crash_at_link
 
     reopened = TemporalVault(spark, root)
     assert not [n for n in os.listdir(root) if n.startswith((".records_tmp_", ".records_old_"))]
     got = state(reopened)
-    assert got == (before if step in ("tmp_write", "rename_out") else after)
+    took_effect = step in ("rename_in", "rmtree_old")
+    assert got == (after if took_effect else before)
+    assert reopened.history().count() == (1 if op == "rollback" and took_effect else 0)
     next_a = 1 + max(n for key, n, _, _ in got[0] if key == "a")
     assert reopened.record("a", {"x": "next"}, datetime(2026, 1, 5))["version"] == f"v{next_a}"
+
+
+def _inodes(vault) -> dict[str, set[int]]:
+    """dt -> the inode numbers of the partition's data files."""
+    import os
+
+    return {dt: {os.stat(f).st_ino for f in files} for dt, files in vault._partitions().items()}
+
+
+@pytest.mark.parametrize("op", sorted(_SWAP_OPS))
+def test_rewrites_keep_the_files_outside_their_scope(vault, op):
+    """rollback(T) rewrites only dt >= date(T), expire(cutoff) only
+    dt <= date(cutoff) and compact only the partitions holding several
+    files; every other partition keeps the very same files (hard links)."""
+    before = _inodes(vault)
+    scope = {
+        "rollback": {dt for dt in before if dt >= vault._dt_of(T_MID)},
+        "expire": {dt for dt in before if dt <= vault._dt_of(datetime(2026, 1, 2, 6, 0, 0))},
+        "compact": {dt for dt, files in vault._partitions().items() if len(files) > 1},
+    }[op]
+    assert scope and scope != set(before)  # the fixture leaves both kinds
+    _SWAP_OPS[op](vault)
+    after = _inodes(vault)
+    for dt in before:
+        if dt in scope:
+            assert before[dt].isdisjoint(after.get(dt, set())), dt
+        else:
+            assert after[dt] == before[dt], dt
+
+
+def test_rollback_with_nothing_after_target_leaves_the_log_alone(vault):
+    before = _inodes(vault)
+    out = vault.rollback(TS["a3"])
+    assert (out["n_affected"], out["affected_keys"]) == (0, [])
+    assert _inodes(vault) == before
+    (row,) = vault.history().collect()
+    assert (row["rollback_to"], row["n_affected"]) == (TS["a3"], 0)
+
+
+def test_compact_on_a_compact_vault_runs_no_spark_job(vault, spark):
+    first, jobs = _jobs_run(spark, vault.compact)
+    assert jobs > 0 and first["files_after"] < first["files_before"]  # the probe counts
+    again, jobs = _jobs_run(spark, vault.compact)
+    assert jobs == 0
+    assert again == {"files_before": first["files_after"], "files_after": first["files_after"]}
+
+
+def _unsorted_files(vault) -> list[str]:
+    """The log's data files whose rows are not in (record_id, version_num)
+    order."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for files in vault._partitions().values():
+        for f in files:
+            t = pq.read_table(f, columns=["record_id", "version_num"])
+            rows = list(zip(t.column("record_id").to_pylist(), t.column("version_num").to_pylist()))
+            if rows != sorted(rows):
+                out.append(f)
+    return out
+
+
+def test_every_log_file_is_sorted_by_key_and_version(vault, spark):
+    batch = spark.createDataFrame(
+        [(k, f'{{"i": {i}}}', datetime(2026, 1, 3, 12, 0, i)) for i, k in enumerate("zbazcbza")],
+        "record_id string, data string, ts timestamp",
+    )
+    vault.record_bulk(batch)
+    assert not _unsorted_files(vault)
+    vault.rollback(datetime(2026, 1, 3, 12, 0, 4))
+    assert not _unsorted_files(vault)
+    for key in "zca":
+        vault.record(key, {"late": key}, datetime(2026, 1, 3, 18))
+    vault.compact()
+    assert not _unsorted_files(vault)
+    assert all(len(files) == 1 for files in vault._partitions().values())
+
+
+@pytest.mark.parametrize(
+    "process_tz, snap, w2, probe",
+    [
+        # process zone ahead of the session zone: v2 lands in the dt= of the
+        # day before its local date, below the snapshot tail's local date
+        ("Asia/Kolkata", datetime(2026, 1, 2, 1), datetime(2026, 1, 2, 2), datetime(2026, 1, 3)),
+        # process zone behind: v2 lands in the dt= of the day after its
+        # local date, above the as-of bound's local date
+        ("America/New_York", datetime(2026, 1, 1, 13), datetime(2026, 1, 1, 20), datetime(2026, 1, 1, 21)),
+    ],
+)
+def test_asof_reads_prune_by_session_zone_date(spark, tmp_path, process_tz, snap, w2, probe):
+    """dt= directories are named by the session-zone date (UTC), naive times
+    are in the process zone; the as-of and snapshot-tail bounds must prune
+    by the former, or a row near midnight is dropped and an older version
+    is returned."""
+    import os
+    import time
+
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = process_tz
+    time.tzset()
+    try:
+        v = TemporalVault(spark, str(tmp_path / "zones"))
+        v.record("k", {"v": 1}, datetime(2026, 1, 1, 12))
+        v.snapshot(snap)
+        v.record("k", {"v": 2}, w2)
+        assert _rows(v.state_at(probe), "record_id", "version") == [("k", "v2")]
+        assert _rows(v.query(probe), "version") == [("v1",), ("v2",)]
+        v.rollback(w2 - timedelta(seconds=1))
+        assert _rows(v.log(), "version", "data") == [("v1", '{"v": 1}'), ("v1", '{"v": 1}')]
+    finally:
+        if prev is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()

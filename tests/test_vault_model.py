@@ -4,11 +4,14 @@ parquet, real writes) and by a small pure-Python model of the reference's
 semantics (append-only versions, rollback = rewrite post-T data + drop
 born-after-T keys). Any divergence in the full log, any as-of state, the
 all-versions query, compare's as-of versions or the vault's version map
-after any op is a bug in one of them."""
+after any op is a bug in one of them. After every op, each dt= directory
+holds only its own date's rows and every file is sorted."""
 
 import json
 from datetime import datetime, timedelta
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
@@ -78,6 +81,21 @@ class PyModel:
             if cur is None or (vnum, rts) > (cur[1], cur[3]):
                 baselines[key] = (key, vnum, data, rts)
         self.rows = post + list(baselines.values())
+
+
+def _check_layout(vault, op):
+    """Every dt= directory holds only rows whose session-zone date is its
+    name, and every data file is sorted by (record_id, version_num) —
+    the two facts the partition-scoped rewrites rely on."""
+    zone = vault._session_tz()
+    for dt, files in vault._partitions().items():
+        for f in files:
+            t = pq.read_table(f, columns=["record_id", "version_num", "ts"])
+            us = t.column("ts").cast(pa.timestamp("us")).cast(pa.int64()).to_pylist()
+            dates = {datetime.fromtimestamp(u // 1_000_000, zone).strftime("%Y-%m-%d") for u in us}
+            assert dates <= {dt}, (op, f, dates)
+            rows = list(zip(t.column("record_id").to_pylist(), t.column("version_num").to_pylist()))
+            assert rows == sorted(rows), (op, f)
 
 
 ops_strategy = st.lists(
@@ -172,6 +190,7 @@ def test_vault_matches_model(spark, tmp_path_factory, ops):
         # the version map, whenever the vault holds one, is the model's
         if vault._latest is not None:
             assert vault._latest == model.latest(), op
+        _check_layout(vault, op)
 
     got = sorted(
         (r["record_id"], r["version_num"], r["data"], r["ts"])
