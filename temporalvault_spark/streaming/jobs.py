@@ -391,15 +391,18 @@ def ingest_into_vault(vault, events: DataFrame, available_now: bool = True):
 
     Retry safety — EXACTLY-ONCE, not just idempotent-skip: foreachBatch
     replays a micro-batch after failures/restarts, and a blind re-append
-    would double every version. Each batch commits through the vault's
-    staged-ingest protocol (record_bulk(stage_tag=...)): the batch's files
-    enter the log with the batch id embedded in their filenames, the sink
-    then writes its durable commit marker (temp file + fsync + rename —
-    never a half-written marker), and only then drops the stage. On start,
+    would double every version. Each batch commits through the stage every
+    bulk append takes (record_bulk(stage_tag=...)): the batch is written to
+    the vault's ``.ingest_stage_b<id>`` and its files enter the log with the
+    batch id embedded in their filenames; a tagged stage, unlike an
+    untagged one, outlives the call. The sink then writes its durable
+    commit marker (temp file + fsync + rename — never a half-written
+    marker), and only then drops the stage (finish_ingest). On start,
     recovery walks vault.pending_ingest_tags(): tag with a marker → the
     crash hit after commit, just clean up; tag without → the crash hit
-    mid-append or pre-marker, abort_ingest deletes the tagged files and the
-    replay re-ingests exactly once. Markers are COMPACTED into a single
+    mid-append or pre-marker, abort_ingest (the vault's one undo of a bulk
+    append) deletes the tagged files and the replay re-ingests exactly
+    once. Markers are COMPACTED into a single
     floor file (all ids <= floor committed) so the marker dir stays O(1).
     Batch ids are scoped to the stream's checkpoint — restarting with a
     fresh checkpoint restarts ids at 0, so pair each checkpoint with its own

@@ -36,16 +36,30 @@ Write path: the vault keeps a ``record_id -> max version_num`` map on the
 driver (the reference's read-before-write, main.py:77-82, without a read).
 It is built on the first write from the newest snapshot plus the
 partition-pruned log tail, updated by every write, and dropped by
-``rollback``/``abort_ingest``. ``record()`` then writes its one row straight
-into ``records/dt=.../`` with pyarrow — hidden temp name, then an atomic
-rename — so a single-row write runs no Spark job. Before any write lands
-its data, it rewrites ``_generation`` with a fresh token; an instance trusts
-its map only while the file still holds the token it last saw or wrote, so
-a second ``TemporalVault`` on the same root used in turn (or a writer that
-crashed between the token and its data) makes the next write rebuild the
-map. Writers must still take turns: the vault is single-writer, and two
-instances writing concurrently can both mint the same ``v{N+1}``. The map
-holds one entry per key on the driver, and ``record_bulk`` broadcasts it.
+``rollback`` and by ``_undo_stage``. ``record()`` then writes its one row
+straight into ``records/dt=.../`` with pyarrow — hidden temp name, then an
+atomic rename — so a single-row write runs no Spark job. Before any write
+lands its data, it rewrites ``_generation`` with a fresh token; an instance
+trusts its map only while the file still holds the token it last saw or
+wrote, so a second ``TemporalVault`` on the same root used in turn (or a
+writer that crashed between the token and its data) makes the next write
+rebuild the map. Writers must still take turns: the vault is single-writer,
+and two instances writing concurrently can both mint the same ``v{N+1}``.
+The map holds one entry per key on the driver, and ``record_bulk`` sends it
+along with the batch, one leading row per key in the batch's window shuffle.
+
+Every ``record_bulk`` takes one path: one Spark job windows the batch and
+writes it into a private stage directory, pyarrow reads the staged
+``record_id``/``version_num``/``ts`` back (row count, earliest ``ts``, the
+map's new maxima), and ``_promote_stage`` renames the staged files into the
+log as ``ingest-<id>-...``. The stage is the undo log of both kinds of
+append: ``_undo_stage`` deletes the ``ingest-<id>-`` files and then the
+stage. An untagged append commits by removing its ``.bulk_stage_<id>``;
+``_recover_swaps`` undoes any such stage left by a crash, so a crashed
+append reopens to the log before it, and an append whose promotion raises
+undoes itself before the error reaches its caller. A tagged append
+(streaming ingest) keeps its ``.ingest_stage_<tag>`` until its caller
+commits (``finish_ingest``) or aborts (``abort_ingest``).
 """
 
 from __future__ import annotations
@@ -61,6 +75,8 @@ from datetime import datetime, timedelta, timezone
 from zoneinfo import ZoneInfo
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -129,6 +145,14 @@ def _write_parquet(directory: str, table: pa.Table) -> None:
 _PENDING_AUDIT = "_rollback_audit"
 
 _SNAPSHOT_NAME = "%Y%m%dT%H%M%S"  # snapshots/<snap_ts>/, whole seconds
+
+_BULK_STAGE = ".bulk_stage_"  # an untagged record_bulk's stage: <root>/.bulk_stage_<id>
+# the staged columns record_bulk reads back; Spark writes ts as INT96, which
+# pyarrow reads as a naive timestamp holding UTC, typed here as the instant
+_STAGED_SCHEMA = pa.schema(
+    [("record_id", pa.string()), ("version_num", pa.int32()), ("ts", _ARROW_TYPES["timestamp"])]
+)
+_STAGED_FORMAT = ds.ParquetFileFormat(read_options={"coerce_int96_timestamp_unit": "us"})
 
 _WEEKDAYS = ["monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]
 _MONTHS = {
@@ -233,7 +257,6 @@ class TemporalVault:
         self.snapshots_path = f"{self.root}/snapshots"
         self.rollback_log_path = f"{self.root}/rollback_log"
         os.makedirs(self.root, exist_ok=True)
-        self._recover_swaps()
         # query()-result cache: truncated-ts -> persisted DataFrame (the
         # engine analog of the reference's 1h-TTL Redis cache, main.py:115-147)
         self._cache: dict[str, DataFrame] = {}
@@ -242,6 +265,7 @@ class TemporalVault:
         # valid for (None: not built yet)
         self._latest: dict[str, int] | None = None
         self._gen_seen: str | None = None
+        self._recover_swaps()
 
     # -- observability (reference: Prometheus counters/histograms,
     # main.py:30-53; here a plain op->count/latency map) ---------------------
@@ -254,13 +278,14 @@ class TemporalVault:
     # -- log access ----------------------------------------------------------
 
     def _recover_swaps(self) -> None:
-        """Crash recovery for ``_replace_log``'s two-rename directory swap
-        (tmp links + write → records->old → tmp->records → publish audit →
-        rm old). A crash between the two renames leaves no records/ dir with
-        the data stranded in .records_old_*; a crash before/after leaves
-        orphaned .records_tmp_* / .records_old_* dirs that would otherwise
-        accumulate forever. Run at vault open and before every op that
-        rewrites the log:
+        """The one crash recovery: for ``_replace_log``'s two-rename
+        directory swap (tmp links + write → records->old → tmp->records →
+        publish audit → rm old) and for untagged bulk appends. A crash
+        between the two renames leaves no records/ dir with the data
+        stranded in .records_old_*; a crash before/after leaves orphaned
+        .records_tmp_* / .records_old_* dirs that would otherwise accumulate
+        forever. Run at vault open and before every op that rewrites the
+        log:
 
         - records/ missing + a COMPLETE tmp (Spark's _SUCCESS marker, written
           only when the job finished) → the swap had passed the point of no
@@ -271,15 +296,14 @@ class TemporalVault:
           swap that took effect → published; one in a tmp or old dir belongs
           to a swap that did not (or is already published) → removed with it.
         - everything left over after that is garbage from finished or failed
-          ops → removed."""
-        olds = sorted(
-            f"{self.root}/{n}" for n in os.listdir(self.root) if n.startswith(".records_old_")
-        )
-        tmps = sorted(
-            f"{self.root}/{n}" for n in os.listdir(self.root) if n.startswith(".records_tmp_")
-        )
-        if not olds and not tmps:
-            return
+          ops → removed.
+        - a ``.bulk_stage_<id>`` dir belongs to an untagged ``record_bulk``
+          that never reached its commit point → undone by ``_undo_stage``
+          (files promoted as ``ingest-<id>-...`` deleted, then the stage).
+          Tagged stages are left to their caller (``pending_ingest_tags``)."""
+        names = os.listdir(self.root)
+        olds = sorted(f"{self.root}/{n}" for n in names if n.startswith(".records_old_"))
+        tmps = sorted(f"{self.root}/{n}" for n in names if n.startswith(".records_tmp_"))
         if not os.path.isdir(self.records_path) and olds:
             complete = [t for t in tmps if os.path.exists(f"{t}/_SUCCESS")]
             if complete:
@@ -292,6 +316,9 @@ class TemporalVault:
         for d in olds + tmps:
             if os.path.isdir(d):
                 shutil.rmtree(d)
+        for n in names:
+            if n.startswith(_BULK_STAGE):
+                self._undo_stage(f"{self.root}/{n}", n[len(_BULK_STAGE):])
 
     def _has_records(self) -> bool:
         return os.path.isdir(self.records_path) and any(
@@ -468,43 +495,63 @@ class TemporalVault:
         batch, offset by the version map's per-key max (set-based main.py:82,
         no per-row lookups and no scan of the log once the map is warm).
 
-        ``stage_tag`` turns the append TRANSACTIONAL (the exactly-once seam
-        for streaming ingest): the batch first writes to a private staging
-        dir, then its part-files move into the log with the tag embedded in
-        every destination FILENAME (``ingest-<tag>-...``) — so a crash at any
-        point leaves a state that ``abort_ingest``/``finish_ingest`` can
-        roll back or complete deterministically (the tagged files ARE the
-        undo log). The caller then records its own durable commit marker and
-        calls ``finish_ingest``; on restart, ``pending_ingest_tags`` +
-        marker presence decide abort vs finish per tag. Single-writer: don't
-        run compact()/rollback() while a tagged ingest is in flight (they
-        rewrite the file layout the tag-undo relies on)."""
+        Every bulk append commits one way, and its stage is its undo log: one
+        Spark job windows the batch and writes it into a private stage
+        directory; pyarrow reads the staged ``record_id``, ``version_num``
+        and ``ts`` back, which gives the row count, the earliest ``ts``
+        (stale snapshots are dropped from it) and each key's new max for the
+        version map; then ``_promote_stage`` renames the staged files into
+        the log as ``ingest-<id>-...``. An untagged append's stage is
+        ``.bulk_stage_<id>``, and removing it is the append's commit point:
+        a crash before that leaves the stage, and ``_recover_swaps`` undoes
+        the append at the next open, so the vault reopens to the log before
+        it. An error raised while the files are promoted or the stage is
+        removed undoes the append at once, tagged or not, so the caller
+        never writes on top of rows that a later open would delete.
+
+        ``stage_tag`` makes the append the exactly-once seam of streaming
+        ingest: the stage is ``.ingest_stage_<tag>``, the promoted files
+        carry the tag, and the stage stays after the call. The caller then
+        records its own durable commit marker and calls ``finish_ingest``;
+        on restart, ``pending_ingest_tags`` + marker presence decide
+        ``abort_ingest`` vs ``finish_ingest`` per tag. A stage left by a
+        failed earlier try of the same tag is undone first. Single-writer:
+        don't run compact()/rollback() while a tagged ingest is in flight
+        (they rewrite the file layout the tag-undo relies on)."""
         t0 = time.perf_counter()
+        if stage_tag is None:
+            tag = uuid.uuid4().hex
+            stage = f"{self.root}/{_BULK_STAGE}{tag}"
+        else:
+            tag, stage = stage_tag, self._stage_path(stage_tag)
+            if os.path.isdir(stage):
+                self._undo_stage(stage, tag)
         latest = self._latest_versions()
         batch = rows.select(
             "record_id",
             F.col("data").cast("string").alias("data"),
             F.date_trunc("second", "ts").alias("ts"),
+            F.lit(None).cast("int").alias("base_num"),
         )
-        # base numbers come from the version map (broadcast of its entries),
-        # not from grouping the whole log; built from Arrow, the map is a
-        # local relation, so the broadcast needs no job of its own
-        base_num = F.lit(0)
+        # base numbers come from the version map, not from grouping the whole
+        # log: each key's max rides the window's own shuffle as a leading
+        # row (a broadcast of the map would run a Spark job of its own)
         if latest:
-            base = self.spark.createDataFrame(
-                pa.table(
-                    {
-                        "record_id": pa.array(list(latest), pa.string()),
-                        "base_num": pa.array(list(latest.values()), pa.int32()),
-                    }
-                )
+            base = pa.table(
+                {
+                    "record_id": pa.array(list(latest), pa.string()),
+                    "base_num": pa.array(list(latest.values()), pa.int32()),
+                }
             )
-            batch = batch.join(F.broadcast(base), "record_id", "left")
-            base_num = F.coalesce("base_num", F.lit(0))
-        w = Window.partitionBy("record_id").orderBy("ts", "data")
+            batch = batch.unionByName(self.spark.createDataFrame(base), allowMissingColumns=True)
+        w = Window.partitionBy("record_id").orderBy(F.col("base_num").isNull(), "ts", "data")
         batch = (
-            batch.withColumn("offset", F.row_number().over(w))
-            .withColumn("version_num", (base_num + F.col("offset")).cast("int"))
+            # row_number counts the leading row when there is one
+            batch.withColumn(
+                "version_num",
+                (F.coalesce(F.first("base_num").over(w) - 1, F.lit(0)) + F.row_number().over(w)).cast("int"),
+            )
+            .filter(F.col("base_num").isNull())
             .withColumn("version", F.concat(F.lit("v"), F.col("version_num")))
             .withColumn(
                 "previous_version",
@@ -518,39 +565,23 @@ class TemporalVault:
             )
             .select([f.name for f in RECORD_SCHEMA.fields])
         )
-        # persist: the window+join pipeline feeds both the per-key stats and
-        # the append — without it the whole batch plan executes twice
-        batch = batch.persist()
+        self._append(batch, stage)
+        staged = ds.dataset(stage, schema=_STAGED_SCHEMA, format=_STAGED_FORMAT).to_table()
+        if staged.num_rows:
+            self._drop_snapshots_from(parse_time(pc.min(staged["ts"]).as_py()))
         try:
-            # one grouped collect: row count, earliest ts (snapshot
-            # invalidation) and each key's new max version (the map)
-            stats = (
-                batch.groupBy("record_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min("ts").alias("lo"),
-                    F.max("version_num").alias("hi"),
-                )
-                .collect()
-            )
-            n = sum(r["n"] for r in stats)
-            if n:
-                self._drop_snapshots_from(min(r["lo"] for r in stats))
             with self._mutating():
+                self._promote_stage(stage, tag)
                 if stage_tag is None:
-                    self._append(batch)
-                else:
-                    stage = self._stage_path(stage_tag)
-                    if os.path.isdir(stage):
-                        shutil.rmtree(stage)  # leftovers of a failed prior try
-                    self._append(batch, stage)
-                    self._promote_stage(stage_tag)
-            latest.update((r["record_id"], r["hi"]) for r in stats)
-        finally:
-            batch.unpersist()
+                    shutil.rmtree(stage)  # the commit point
+        except OSError:
+            self._undo_stage(stage, tag)  # a failed append leaves no row behind
+            raise
+        hi = staged.group_by("record_id").aggregate([("version_num", "max")])
+        latest.update(zip(hi["record_id"].to_pylist(), hi["version_num_max"].to_pylist()))
         self._invalidate()
         self._timed("record_bulk", t0)
-        return n
+        return staged.num_rows
 
     # -- transactional ingest (staged commit) --------------------------------
 
@@ -559,11 +590,11 @@ class TemporalVault:
             raise ValueError(f"ingest tag must be filename-safe, got {tag!r}")
         return f"{self.root}/.ingest_stage_{tag}"
 
-    def _promote_stage(self, tag: str) -> None:
-        """Move staged part-files into the live log, tagging every destination
-        filename with the ingest tag (per-file renames are atomic; the tag
-        makes any partial promotion identifiable and reversible)."""
-        stage = self._stage_path(tag)
+    def _promote_stage(self, stage: str, tag: str) -> None:
+        """Move a stage's part-files into the live log, each renamed
+        ``ingest-<tag>-<name>`` (per-file renames are atomic; the tag makes
+        any partial promotion identifiable, and ``_undo_stage`` reverses
+        it)."""
         for dt_dir in os.listdir(stage):
             if not dt_dir.startswith("dt="):
                 continue
@@ -587,27 +618,30 @@ class TemporalVault:
         )
 
     def finish_ingest(self, tag: str) -> None:
-        """Drop the staging dir after the caller's commit marker is durable.
-        Idempotent."""
+        """Drop the staging dir after the caller's commit marker is durable
+        (the data is already live). Idempotent."""
         shutil.rmtree(self._stage_path(tag), ignore_errors=True)
-        self._invalidate()
 
     def abort_ingest(self, tag: str) -> None:
-        """Undo an uncommitted ingest: delete every log file carrying the tag
-        (whether the promotion finished or died halfway) plus the staging
-        dir. Idempotent — safe to re-run after a crash during the abort.
-        Drops the version map: the removed rows may have held a key's max."""
+        """Undo an uncommitted ingest with ``_undo_stage``: its log files
+        go, whether the promotion finished or died halfway, then its
+        staging dir. Idempotent — safe to re-run after a crash during the
+        abort."""
+        self._undo_stage(self._stage_path(tag), tag)
+
+    def _undo_stage(self, stage: str, tag: str) -> None:
+        """The one undo of a bulk append (``abort_ingest``, and
+        ``_recover_swaps`` for an untagged append that never committed):
+        delete every log file named ``ingest-<tag>-...``, then the stage, so
+        a crash in between leaves the stage to undo again. Drops the version
+        map: the removed rows may have held a key's max."""
         with self._mutating():
-            if os.path.isdir(self.records_path):
-                for dt_dir in os.listdir(self.records_path):
-                    d = f"{self.records_path}/{dt_dir}"
-                    if not (dt_dir.startswith("dt=") and os.path.isdir(d)):
-                        continue
-                    for fn in os.listdir(d):
-                        if fn.startswith(f"ingest-{tag}-"):
-                            os.remove(f"{d}/{fn}")
+            for files in self._partitions().values():
+                for f in files:
+                    if os.path.basename(f).startswith(f"ingest-{tag}-"):
+                        os.remove(f)
         self._latest = None
-        shutil.rmtree(self._stage_path(tag), ignore_errors=True)
+        shutil.rmtree(stage, ignore_errors=True)
         self._invalidate()
 
     def _append(self, df: DataFrame, path: str | None = None) -> None:

@@ -2,6 +2,9 @@
 from FIXTURES.md encoding the reference's edge semantics (cites into
 /root/reference/app/main.py)."""
 
+import contextlib
+import os
+import time
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -779,29 +782,40 @@ def test_every_log_file_is_sorted_by_key_and_version(vault, spark):
     assert all(len(files) == 1 for files in vault._partitions().values())
 
 
-@pytest.mark.parametrize(
-    "process_tz, snap, w2, probe",
-    [
-        # process zone ahead of the session zone: v2 lands in the dt= of the
-        # day before its local date, below the snapshot tail's local date
-        ("Asia/Kolkata", datetime(2026, 1, 2, 1), datetime(2026, 1, 2, 2), datetime(2026, 1, 3)),
-        # process zone behind: v2 lands in the dt= of the day after its
-        # local date, above the as-of bound's local date
-        ("America/New_York", datetime(2026, 1, 1, 13), datetime(2026, 1, 1, 20), datetime(2026, 1, 1, 21)),
-    ],
-)
+@contextlib.contextmanager
+def _process_tz(zone):
+    """Run the block with the process-local zone (``TZ``) set to ``zone``;
+    the session zone that names the dt= partitions stays UTC."""
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = zone
+    time.tzset()
+    try:
+        yield
+    finally:
+        if prev is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
+
+
+_ZONE_CASES = [
+    # process zone ahead of the session zone: v2 lands in the dt= of the
+    # day before its local date, below the snapshot tail's local date
+    ("Asia/Kolkata", datetime(2026, 1, 2, 1), datetime(2026, 1, 2, 2), datetime(2026, 1, 3)),
+    # process zone behind: v2 lands in the dt= of the day after its
+    # local date, above the as-of bound's local date
+    ("America/New_York", datetime(2026, 1, 1, 13), datetime(2026, 1, 1, 20), datetime(2026, 1, 1, 21)),
+]
+
+
+@pytest.mark.parametrize("process_tz, snap, w2, probe", _ZONE_CASES)
 def test_asof_reads_prune_by_session_zone_date(spark, tmp_path, process_tz, snap, w2, probe):
     """dt= directories are named by the session-zone date (UTC), naive times
     are in the process zone; the as-of and snapshot-tail bounds must prune
     by the former, or a row near midnight is dropped and an older version
     is returned."""
-    import os
-    import time
-
-    prev = os.environ.get("TZ")
-    os.environ["TZ"] = process_tz
-    time.tzset()
-    try:
+    with _process_tz(process_tz):
         v = TemporalVault(spark, str(tmp_path / "zones"))
         v.record("k", {"v": 1}, datetime(2026, 1, 1, 12))
         v.snapshot(snap)
@@ -810,9 +824,206 @@ def test_asof_reads_prune_by_session_zone_date(spark, tmp_path, process_tz, snap
         assert _rows(v.query(probe), "version") == [("v1",), ("v2",)]
         v.rollback(w2 - timedelta(seconds=1))
         assert _rows(v.log(), "version", "data") == [("v1", '{"v": 1}'), ("v1", '{"v": 1}')]
-    finally:
-        if prev is None:
-            os.environ.pop("TZ")
-        else:
-            os.environ["TZ"] = prev
-        time.tzset()
+
+
+_BATCH_SCHEMA = "record_id string, data string, ts timestamp"
+
+
+@pytest.mark.parametrize("process_tz", [case[0] for case in _ZONE_CASES])
+def test_record_bulk_drops_the_snapshots_from_its_earliest_row(spark, tmp_path, process_tz):
+    """record_bulk reads its earliest ts back from the staged files as a UTC
+    instant, while snapshot names are naive local times: exactly the
+    snapshots at or after the batch's earliest row go, with the process
+    zone ahead of UTC or behind it."""
+    one = timedelta(seconds=1)
+    with _process_tz(process_tz):
+        v = TemporalVault(spark, str(tmp_path / "zones"))
+        v.record("k", {"v": 1}, datetime(2026, 1, 1, 12))
+        first = datetime(2026, 1, 1, 20)
+        for snap in (first - one, first, first + one):
+            v.snapshot(snap)
+        batch = spark.createDataFrame(
+            [("k", '{"v": 2}', first + timedelta(hours=2)), ("j", '{"v": 1}', first)], _BATCH_SCHEMA
+        )
+        assert v.record_bulk(batch) == 2
+        assert [t for t, _ in v._snapshots()] == [first - one]
+        got = _rows(v.state_at(first + timedelta(hours=3)), "record_id", "version")
+        assert got == [("j", "v1"), ("k", "v2")]
+
+
+def _stages(root) -> list[str]:
+    return [n for n in os.listdir(root) if n.startswith((".bulk_stage_", ".ingest_stage_"))]
+
+
+def test_record_bulk_of_an_empty_batch_changes_nothing(vault, spark):
+    vault.snapshot(T_MID)
+
+    def state():
+        log = _rows(vault.log(), "record_id", "version_num", "data", "ts")
+        return log, vault._snapshots(), dict(vault._latest_versions())
+
+    before = state()
+    assert vault.record_bulk(spark.createDataFrame([], _BATCH_SCHEMA)) == 0
+    assert state() == before
+    assert not _stages(vault.root)
+
+
+_BULK_STEPS = ["stage_write", "rename_first", "rename_middle", "promoted", "undo_half"]
+
+
+class _Crash(BaseException):
+    """An injected kill: a ``BaseException``, so none of the vault's error
+    handlers (``except OSError``) runs, as none would in a killed process."""
+
+
+@pytest.mark.parametrize("step", _BULK_STEPS)
+@pytest.mark.parametrize("tagged", [False, True], ids=["untagged", "tagged"])
+def test_crash_at_each_bulk_append_step_reopens_to_before_or_after(
+    spark, tmp_path, monkeypatch, tagged, step
+):
+    """A crash at each step of a bulk append — after the stage write, after
+    the first and after a middle per-file rename of ``_promote_stage``,
+    after the promotion (an untagged append's stage removal, or a tagged
+    ingest's ``finish_ingest`` once its commit marker is written), and
+    halfway through undoing an append that crashed after its promotion —
+    leaves a vault that reopens to the state before the append, or after it
+    for a tagged ingest whose marker was written. A tagged ingest is
+    resolved by ``ingest_into_vault``'s rule: abort without a marker, finish
+    with one. No stage is left, and the next record() mints the next
+    version of the reopened state."""
+    import shutil
+
+    root = str(tmp_path / "bulk")
+    v = _fixture_vault(spark, root)
+    v.snapshot(TS["a3"])
+    shutil.copytree(root, str(tmp_path / "clean"))
+    probes = (TS["b1"], datetime(2026, 1, 6))
+    # five dates, so the stage holds five files to promote one by one
+    batch = spark.createDataFrame(
+        [(k, f'{{"x": "bulk{d}"}}', datetime(2026, 1, d, 12)) for d, k in enumerate("adabd", start=1)],
+        _BATCH_SCHEMA,
+    )
+    marker = []  # the ingest caller's durable commit marker
+
+    def append(vault):
+        if not tagged:
+            vault.record_bulk(batch)
+            return
+        vault.record_bulk(batch, stage_tag="b1")
+        if step == "undo_half":
+            crash()  # died before the commit marker
+        marker.append("b1")
+        vault.finish_ingest("b1")
+
+    def reopen():
+        reopened = TemporalVault(spark, root)
+        for tag in reopened.pending_ingest_tags():
+            if tag in marker:
+                reopened.finish_ingest(tag)
+            else:
+                reopened.abort_ingest(tag)
+        return reopened
+
+    def state(vault):
+        log = _rows(vault.log(), "record_id", "version_num", "data", "ts")
+        asof = [_rows(vault.state_at(p), "record_id", "version", "data") for p in probes]
+        return log, asof
+
+    def crash():
+        raise _Crash(step)
+
+    before = state(v)
+    real_append, real_rename, real_rmtree, real_remove = (
+        TemporalVault._append, os.rename, shutil.rmtree, os.remove)
+    renames, crash_after_renames = [], None  # the clean run only counts
+
+    def rename(src, dst):
+        real_rename(src, dst)
+        if "_stage_" in src:
+            renames.append(dst)
+            if len(renames) == crash_after_renames:
+                crash()
+
+    clean = TemporalVault(spark, str(tmp_path / "clean"))
+    monkeypatch.setattr(os, "rename", rename)
+    clean.record_bulk(batch)  # either kind of append, run to the end
+    monkeypatch.undo()
+    after = state(clean)
+    assert len(renames) == 5
+    crash_after_renames = {"rename_first": 1, "rename_middle": 3}.get(step)
+    renames = []
+
+    def staged_append(self, df, path=None):
+        real_append(self, df, path)
+        if step == "stage_write" and "_stage_" in str(path):
+            crash()
+
+    def rmtree(path, *args, **kwargs):
+        if step in ("promoted", "undo_half") and "_stage_" in str(path):
+            crash()
+        real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(TemporalVault, "_append", staged_append)
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    with pytest.raises(_Crash):
+        append(v)
+    monkeypatch.undo()
+    assert _stages(root)  # the crash left the stage behind
+
+    if step == "undo_half":
+        removed = []
+
+        def remove(path):
+            if os.path.basename(path).startswith("ingest-"):
+                if len(removed) == 2:
+                    crash()
+                removed.append(path)
+            real_remove(path)
+
+        monkeypatch.setattr(os, "remove", remove)
+        with pytest.raises(_Crash):
+            reopen()
+        monkeypatch.undo()
+        assert len(removed) == 2
+
+    reopened = reopen()
+    assert not _stages(root)
+    got = state(reopened)
+    assert got == (after if tagged and step == "promoted" else before)
+    next_a = 1 + max(n for key, n, _, _ in got[0] if key == "a")
+    assert reopened.record("a", {"x": "next"}, datetime(2026, 1, 7))["version"] == f"v{next_a}"
+
+
+@pytest.mark.parametrize("tagged", [False, True], ids=["untagged", "tagged"])
+def test_a_bulk_append_whose_promotion_fails_undoes_itself(spark, tmp_path, monkeypatch, tagged):
+    """An error raised while the staged files are promoted undoes the append
+    before the caller sees it: the log is as before, no stage is left for a
+    later open to undo under newer writes, and the next record() continues
+    the chain without a gap, also after a reopen."""
+    v = _fixture_vault(spark, str(tmp_path / "bulk"))
+    before = _rows(v.log(), "record_id", "version_num", "data", "ts")
+    batch = spark.createDataFrame(
+        [(k, f'{{"x": "bulk{d}"}}', datetime(2026, 1, d, 12)) for d, k in enumerate("adabd", start=1)],
+        _BATCH_SCHEMA,
+    )
+    real_rename, promoted = os.rename, []
+
+    def rename(src, dst):
+        if "_stage_" in src:
+            if len(promoted) == 2:
+                raise OSError("disk error")
+            promoted.append(dst)
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="disk error"):
+        v.record_bulk(batch, stage_tag="b1" if tagged else None)
+    monkeypatch.undo()
+    assert len(promoted) == 2
+    assert _rows(v.log(), "record_id", "version_num", "data", "ts") == before
+    assert not _stages(v.root)
+    next_a = 1 + max(n for key, n, _, _ in before if key == "a")
+    assert v.record("a", {"x": "next"}, datetime(2026, 1, 7))["version"] == f"v{next_a}"
+    after = _rows(v.log(), "record_id", "version_num", "data", "ts")
+    assert _rows(TemporalVault(spark, v.root).log(), "record_id", "version_num", "data", "ts") == after

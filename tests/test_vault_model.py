@@ -187,7 +187,10 @@ def test_vault_matches_model(spark, tmp_path_factory, ops):
             # engine — snapshot() materializes state_at, which raises there
             if n_records and (floor is None or TS_GRID[ti] >= floor):
                 vault.snapshot(TS_GRID[ti])
-        # the version map, whenever the vault holds one, is the model's
+        # the version map, whenever the vault holds one, is the model's; a
+        # bulk append always leaves it held
+        if op[0] == "record_bulk":
+            assert vault._latest is not None, op
         if vault._latest is not None:
             assert vault._latest == model.latest(), op
         _check_layout(vault, op)

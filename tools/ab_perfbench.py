@@ -11,10 +11,12 @@ both sides alike. ``--aa`` runs CHECKOUT against a ``cp -r`` copy of itself
 made in a hidden directory beside it (removed at the end): the spread it
 shows is what the directory alone moves, the floor under any A/B verdict.
 
-Per workload and metric it prints the median of each side, their ratio, the
-base side's IQR (q3 - q1), the pairs the candidate won (better in the
-metric's direction from BASE's BENCHMARK.json) and whether the medians differ
-by more than that IQR. Besides the JSON result line's metrics it reads, from
+Per workload and metric it prints the median of each side, their ratio, a
+bootstrap 95% interval on that ratio (the pairs resampled with replacement
+BOOT_RESAMPLES times from a fixed seed, so a report is reproducible from its
+runs), the base side's IQR (q3 - q1), the pairs the candidate won (better in
+the metric's direction from BASE's BENCHMARK.json) and whether the medians
+differ by more than that IQR. Besides the JSON result line's metrics it reads, from
 the printed run summary, each op class's and op type's CPU per op (``class.*``
 and ``op.*`` rows, lower is better), and each run's round count. Every run
 must print ``"correct": true`` with no failed op; the tool says which did
@@ -26,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import random
 import re
 import shutil
 import statistics
@@ -35,6 +38,7 @@ import tempfile
 
 CLASS_LINE = re.compile(r"^\s+class (\w+)\s.*cpu_ms_per_op=\s*([\d.]+)")
 OP_LINE = re.compile(r"^\s+(\w+)\s+n=(\d+)\s+p50=.*cpu p50=\s*([\d.]+) ms")
+BOOT_RESAMPLES, BOOT_SEED = 2000, 20240101
 
 
 def parse_seeds(text: str) -> list[int]:
@@ -82,6 +86,22 @@ def iqr(xs: list[float]) -> float:
     return q3 - q1
 
 
+def ratio_interval(both: list[tuple[float, float]]) -> tuple[float, float] | None:
+    """Bootstrap 95% interval of median(cand) / median(base): the pairs are
+    resampled together, so host drift shared by a pair stays paired."""
+    rng = random.Random(BOOT_SEED)
+    ratios = []
+    for _ in range(BOOT_RESAMPLES):
+        sample = rng.choices(both, k=len(both))
+        mb = statistics.median(x for x, _ in sample)
+        if mb:
+            ratios.append(statistics.median(y for _, y in sample) / mb)
+    if len(ratios) < BOOT_RESAMPLES // 2:
+        return None
+    ratios.sort()
+    return ratios[int(0.025 * len(ratios))], ratios[int(0.975 * len(ratios)) - 1]
+
+
 def report(runs: list[dict], base: str, cand: str, better: dict[str, str]) -> None:
     for workload in dict.fromkeys(r["workload"] for r in runs):
         pairs = {}
@@ -100,7 +120,7 @@ def report(runs: list[dict], base: str, cand: str, better: dict[str, str]) -> No
                        & {k for p in pairs for k in p["cand"]["metrics"]},
                        key=lambda k: (k.startswith(("class.", "op.")), k))
         print(f"  {'metric':<36} {'base med':>11} {'cand med':>11} {'ratio':>7} "
-              f"{'base IQR':>10} {'won':>6}  beyond IQR")
+              f"{'ratio 95% CI':>15} {'base IQR':>10} {'won':>6}  beyond IQR")
         for name in names:
             both = [(p["base"]["metrics"][name], p["cand"]["metrics"][name]) for p in pairs
                     if name in p["base"]["metrics"] and name in p["cand"]["metrics"]]
@@ -109,7 +129,9 @@ def report(runs: list[dict], base: str, cand: str, better: dict[str, str]) -> No
             won = sum((y > x) if higher else (y < x) for x, y in both)
             mb, mc, spread = statistics.median(b), statistics.median(c), iqr(b)
             ratio = f"{mc / mb:7.3f}" if mb else "      -"
-            print(f"  {name:<36} {mb:11.4g} {mc:11.4g} {ratio} {spread:10.4g} "
+            ci = ratio_interval(both)
+            ci = f"[{ci[0]:.3f}, {ci[1]:.3f}]" if ci else "-"
+            print(f"  {name:<36} {mb:11.4g} {mc:11.4g} {ratio} {ci:>15} {spread:10.4g} "
                   f"{won:>2}/{len(both):<3}  {'yes' if abs(mc - mb) > spread else 'no'}")
 
 
